@@ -130,31 +130,15 @@ class Engine:
     ) -> dict[str, int]:
         """Insert-ignore every frame into a parquet directory or a
         ``jdbc:`` URL (parents first). Returns inserted counts."""
-        from dbcut_spark.catalog import topo_order
-        from dbcut_spark.sinks.insert_ignore import (
-            insert_ignore_parquet,
-            jdbc_insert_auto,
-        )
+        from dbcut_spark.sinks.insert_ignore import insert_ignore
+        from dbcut_spark.sinks.sqldump import topo_frames
 
-        topo = {t: i for i, t in enumerate(topo_order(self.catalog))}
-        out: dict[str, int] = {}
-        jdbc = destination.startswith("jdbc:")
-        if not jdbc:
+        if not destination.startswith("jdbc:"):
             os.makedirs(destination, exist_ok=True)
-        for table in sorted(frames, key=lambda t: topo.get(t, len(topo))):
-            df = frames[table]
+        out: dict[str, int] = {}
+        for table, df in topo_frames(self.catalog, frames).items():
             pk = list(self.catalog.table(table).pk)
-            if jdbc:
-                out[table] = jdbc_insert_auto(
-                    self.spark, df, destination, table, pk
-                )
-            else:
-                out[table] = insert_ignore_parquet(
-                    self.spark,
-                    df,
-                    os.path.join(destination, f"{table}.parquet"),
-                    pk,
-                )
+            out[table] = insert_ignore(self.spark, df, destination, table, pk)
         self.release()
         return out
 
@@ -173,24 +157,23 @@ class Engine:
         ``schema_evolution`` ("strict" | "add", parquet targets only)
         controls what an extra incoming column does: raise, or widen
         the target with NULL backfill."""
-        from dbcut_spark.catalog import topo_order
         from dbcut_spark.sinks.insert_ignore import jdbc_upsert, upsert_parquet
+        from dbcut_spark.sinks.sqldump import topo_frames
 
-        topo = {t: i for i, t in enumerate(topo_order(self.catalog))}
         jdbc = destination.startswith("jdbc:")
         if not jdbc:
             os.makedirs(destination, exist_ok=True)
         out: dict[str, tuple[int, int]] = {}
-        for table in sorted(frames, key=lambda t: topo.get(t, len(topo))):
+        for table, df in topo_frames(self.catalog, frames).items():
             pk = list(self.catalog.table(table).pk)
             if jdbc:
                 out[table] = jdbc_upsert(
-                    self.spark, frames[table], destination, table, pk, dialect
+                    self.spark, df, destination, table, pk, dialect
                 )
             else:
                 out[table] = upsert_parquet(
                     self.spark,
-                    frames[table],
+                    df,
                     os.path.join(destination, f"{table}.parquet"),
                     pk,
                     schema_evolution=schema_evolution,

@@ -16,14 +16,10 @@ import sys
 
 import click
 
+from dbcut_spark.api import Engine
 from dbcut_spark.cache import ResultCache, cache_key
 from dbcut_spark.catalog import Catalog, TPCH_CATALOG, topo_order
 from dbcut_spark.config import load_config, normalize_query
-from dbcut_spark.operators.closure import (
-    ClosureExecutor,
-    parquet_loader,
-    parquet_table_rows,
-)
 from dbcut_spark.operators.pinning import release_pinned
 from dbcut_spark.plans.extraction import build_plan
 
@@ -89,6 +85,7 @@ class Ctx:
         self._spark = None
         self.cache = ResultCache(self.config.get("cache", "~/.cache/dbcut_spark"))
         self._catalog: Catalog | None = None
+        self._engine: Engine | None = None
 
     @property
     def catalog(self) -> Catalog:
@@ -140,32 +137,21 @@ class Ctx:
                 continue
             yield i, raw
 
-    def iter_queries(self):
-        yield from self._selected()
-
     def plans(self):
         for i, raw in self._selected():
             yield i, build_plan(self.catalog, raw, self.config)
 
-    def executor(self) -> ClosureExecutor:
-        if self.source.startswith("jdbc:"):
-            from dbcut_spark.sources.jdbc import jdbc_table_rows, source_loader
-
-            # statistics-store row estimates (mysql/pg/sqlite) with a
-            # once-per-table exact-count fallback feed the same routing
-            # channel parquet footers do — salted backref cap and
-            # broadcast/Bloom frontier choices now route on real bounds
-            # for jdbc: sources too (round-10 verdict ask #4)
-            return ClosureExecutor(
-                self.spark,
-                source_loader(self.spark, self.source, self.catalog),
-                table_rows=jdbc_table_rows(self.spark, self.source),
+    @property
+    def engine(self) -> Engine:
+        """The run's one Engine, and so its one closure executor, over
+        the source. Built on first use: commands that never extract
+        (tree, purgecache) never start Spark."""
+        if self._engine is None:
+            self._engine = Engine(
+                self.source, spark=self.spark, catalog=self.catalog,
+                config=self.config,
             )
-        return ClosureExecutor(
-            self.spark,
-            parquet_loader(self.spark, self.source),
-            table_rows=parquet_table_rows(self.source),
-        )
+        return self._engine
 
     def _catalog_info(self) -> dict:
         """Catalog identity for cache keying: the reference keys its
@@ -191,7 +177,7 @@ class Ctx:
             else contextlib.nullcontext({"rows": None})
         )
         with prof as rec:
-            frames = self.executor().execute(plan)
+            frames = self.engine.executor.execute(plan)
             if not self.no_cache:
                 counts = self.cache.save(key, frames)
                 rec["rows"] = sum(counts.values())
@@ -230,24 +216,19 @@ def load(ctx: Ctx):
     routes inserts through a live database — FK-safe topological order,
     table auto-create on first load, idempotent insert-ignore after
     (the reference's mysql→{mysql,sqlite,postgres} load matrix,
-    ``/root/reference/tests/test_cli.py:72-184``)."""
-    from dbcut_spark.sinks.insert_ignore import (
-        insert_ignore_jdbc,
-        insert_ignore_parquet,
-    )
+    reference ``tests/test_cli.py:72-184``)."""
+    from dbcut_spark.sinks.insert_ignore import insert_ignore
+    from dbcut_spark.sinks.sqldump import topo_frames
 
-    jdbc = ctx.dest.startswith("jdbc:")
-    if not jdbc:
+    if not ctx.dest.startswith("jdbc:"):
         os.makedirs(ctx.dest, exist_ok=True)
-    topo = {t: i for i, t in enumerate(topo_order(ctx.catalog))}
     for i, plan in ctx.plans():
         click.echo(f"query {i}: from {plan.root_table}")
         click.echo(plan.tree.render())
         frames = ctx.run_closure(plan)
         # parents before children: FK-enforcing JDBC targets reject
         # child rows whose parent has not been inserted yet
-        for table in sorted(frames, key=lambda t: topo.get(t, len(topo))):
-            df = frames[table]
+        for table, df in topo_frames(ctx.catalog, frames).items():
             pk = list(ctx.catalog.table(table).pk)
             prof = (
                 ctx.profiler.timed(f"insert {table}")
@@ -255,23 +236,10 @@ def load(ctx: Ctx):
                 else contextlib.nullcontext({"rows": None})
             )
             with prof as rec:
-                if jdbc:
-                    n = _jdbc_insert(ctx, df, table, pk)
-                else:
-                    n = insert_ignore_parquet(
-                        ctx.spark, df, os.path.join(ctx.dest, f"{table}.parquet"), pk
-                    )
+                n = insert_ignore(ctx.spark, df, ctx.dest, table, pk)
                 rec["rows"] = n
             click.echo(f"  {table}: +{n} rows")
         release_pinned()
-
-
-def _jdbc_insert(ctx: Ctx, df, table: str, pk: list[str]) -> int:
-    """Insert-ignore into a live JDBC destination (shared first-contact
-    auto-create + insert-ignore logic in sinks.insert_ignore)."""
-    from dbcut_spark.sinks.insert_ignore import jdbc_insert_auto
-
-    return jdbc_insert_auto(ctx.spark, df, ctx.dest, table, pk)
 
 
 @cli.command()
@@ -283,7 +251,7 @@ def dumpjson(ctx: Ctx):
 
     os.makedirs(ctx.dest, exist_ok=True)
     for i, plan in ctx.plans():
-        _, frontiers = ctx.executor().execute_nodes(plan)
+        _, frontiers = ctx.engine.executor.execute_nodes(plan)
         key = cache_key(ctx.source, plan.spec, ctx._catalog_info())
         out = os.path.join(ctx.dest, f"{plan.root_table}-{key[:12]}.json")
         nested_export(plan, frontiers, out)
@@ -757,7 +725,7 @@ def explain(ctx: Ctx, mode: str):
             click.echo(_root_sql(plan))
         except Exception:  # noqa: BLE001 - SQL echo is best-effort
             pass
-        df = ctx.executor().root_frame(plan)
+        df = ctx.engine.executor.root_frame(plan)
         click.echo(
             df._jdf.queryExecution().explainString(
                 ctx.spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
@@ -826,7 +794,7 @@ def verify(ctx: Ctx, max_rows: int):
                     f"FAIL  query {i} {tbl}: no parquet source for table"
                 )
             continue
-        frames = ctx.executor().execute(plan)
+        frames = ctx.engine.executor.execute(plan)
         for table in sorted(frames):
             # persist across the count + collect pair: the cap check
             # needs a count BEFORE collecting (that is the whole OOM

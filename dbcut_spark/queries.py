@@ -16,11 +16,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from dbcut_spark.catalog import TPCH_CATALOG
-from dbcut_spark.operators.closure import (
-    ClosureExecutor,
-    parquet_loader,
-    parquet_table_rows,
-)
+from dbcut_spark.api import Engine
 from dbcut_spark.plans.extraction import build_plan
 from dbcut_spark.plans.oracle import plan_oracle_sql
 
@@ -395,21 +391,33 @@ FIXTURE_TABLES: dict[str, list[str]] = {
 }
 
 
-def _closure_fn(fixture: str, table: str):
+def _closure_fn(fixture: str, table: str, salted: bool | None = None):
+    """Registry query for one table of a closure fixture. ``salted=True``
+    is the forced-salted twin: the two-phase skew-safe backref cap must
+    hash-match the plain window's oracle — salted == plain proven
+    through DuckDB, not just plan-shape tests."""
+
     def run(spark: SparkSession, sf_dir: str) -> DataFrame:
         plan = build_plan(TPCH_CATALOG, FIXTURES[fixture])
-        ex = ClosureExecutor(
-            spark,
-            parquet_loader(spark, sf_dir),
-            table_rows=parquet_table_rows(sf_dir),
-        )
+        ex = Engine(sf_dir, spark=spark, catalog=TPCH_CATALOG).executor
+        ex.salted_backref_cap = salted
         return ex.closure_table(plan, table)
 
-    run.__name__ = f"{fixture}__{table}"
-    run.__doc__ = (
-        f"Extraction closure of {table!r} for fixture {fixture!r} "
-        "(frontier semi-joins; see dbcut_spark.operators.closure)."
-    )
+    if salted:
+        run.__name__ = f"{fixture}_salted__{table}"
+        run.__doc__ = (
+            f"Extraction closure of {table!r} for fixture {fixture!r} "
+            "with the skew-safe salted per-parent backref cap FORCED "
+            "(operators/skew.py:salted_top_per_key) — same oracle as "
+            "the plain-window twin, so the hash match is the salted == "
+            "plain theorem under the DuckDB recomputation."
+        )
+    else:
+        run.__name__ = f"{fixture}__{table}"
+        run.__doc__ = (
+            f"Extraction closure of {table!r} for fixture {fixture!r} "
+            "(frontier semi-joins; see dbcut_spark.operators.closure)."
+        )
     return run
 
 
@@ -421,35 +429,8 @@ for _fixture, _tables in FIXTURE_TABLES.items():
         ORACLES[_name] = plan_oracle_sql(_plan, _table)
 
 
-def _closure_salted_cap_fn(fixture: str, table: str):
-    """Forced-salted twin of a closure fixture (round 10): the
-    two-phase skew-safe backref cap must hash-match the plain window's
-    oracle — salted == plain proven through DuckDB, not just
-    plan-shape tests."""
-
-    def run(spark: SparkSession, sf_dir: str) -> DataFrame:
-        plan = build_plan(TPCH_CATALOG, FIXTURES[fixture])
-        ex = ClosureExecutor(
-            spark,
-            parquet_loader(spark, sf_dir),
-            table_rows=parquet_table_rows(sf_dir),
-            salted_backref_cap=True,
-        )
-        return ex.closure_table(plan, table)
-
-    run.__name__ = f"{fixture}_salted__{table}"
-    run.__doc__ = (
-        f"Extraction closure of {table!r} for fixture {fixture!r} with "
-        "the skew-safe salted per-parent backref cap FORCED "
-        "(operators/skew.py:salted_top_per_key) — same oracle as the "
-        "plain-window twin, so the hash match is the salted == plain "
-        "theorem under the DuckDB recomputation."
-    )
-    return run
-
-
-QUERIES["backref_cap_salted__orders"] = _closure_salted_cap_fn(
-    "backref_cap", "orders"
+QUERIES["backref_cap_salted__orders"] = _closure_fn(
+    "backref_cap", "orders", salted=True
 )
 ORACLES["backref_cap_salted__orders"] = plan_oracle_sql(
     build_plan(TPCH_CATALOG, FIXTURES["backref_cap"]), "orders"

@@ -4601,8 +4601,10 @@ def ann_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     def _materialize(item):
         name, fn = item
-        # thread-local: labels each branch's jobs without clobbering
-        # the other threads' descriptions
+        # labels each branch's jobs; per-thread only in PySpark's
+        # pinned-thread mode (the default) — with PYSPARK_PIN_THREAD=
+        # false the five threads share JVM threads and the labels can
+        # clobber each other (labels only, results unaffected)
         spark.sparkContext.setJobDescription(f"ann_recall_eval: {name}")
         df = fn(spark, sf_dir)
         df = (

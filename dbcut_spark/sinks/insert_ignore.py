@@ -2,10 +2,16 @@
 left-anti join against existing target PKs.
 
 The reference compiles INSERT with per-dialect IGNORE clauses
-(``/root/reference/dbcut/compiler.py:66-78``: PG ``ON CONFLICT DO
-NOTHING``, MySQL ``INSERT IGNORE``, SQLite ``INSERT OR IGNORE``). Spark's
+(reference ``dbcut/compiler.py:66-78``: PG ``ON CONFLICT DO NOTHING``,
+MySQL ``INSERT IGNORE``, SQLite ``INSERT OR IGNORE``). Spark's
 JDBC/parquet writers have no conflict clause, so new rows are filtered
 first: ``new ⟕̸ existing`` on the PK (LEFT ANTI), then appended.
+
+Every insert-ignore is ONE write job: the anti-joined frame is appended
+directly and the written row count rides that job as an ``observe``
+metric (:func:`_observed_write`) — no cache, no count pre-pass. Loads
+reach the parquet and JDBC writers through one router,
+:func:`insert_ignore`.
 
 Scale note: the anti-join shuffles on the PK unless the *existing-keys*
 side is small enough to broadcast. For append-mostly pipelines the
@@ -130,61 +136,42 @@ def _recover_staging(spark: SparkSession, path: str) -> None:
             )
 
 
-def _sweep_empty_stubs(path: str) -> None:
-    """Delete zero-ROW top-level part-files — the schema-only stubs an
-    all-duplicate ``count_rows=False`` append leaves behind. Zero-row
-    files are invisible to readers (no rows to lose), so deleting any
-    of them — this batch's or an earlier one's — never changes a read;
-    runs ONLY on the rare all-dup batch, so the directory listing is
-    not a steady-state cost. Footer check via pyarrow (driver-side,
-    bytes-bounded: stubs are a few hundred bytes; anything over 16 KB
-    is skipped without opening)."""
-    import pyarrow.parquet as pq
+def _observed_write(df: DataFrame, write) -> int:
+    """Run ``write(df)`` and return the number of rows it wrote. The
+    count rides the write job itself as an ``observe`` metric: no
+    cache, no separate count job, and the frame's lineage runs once."""
+    from pyspark.sql import Observation
 
-    try:
-        names = os.listdir(path)
-    except OSError:
-        return
-    for name in names:
-        if not name.endswith(".parquet"):
-            continue
-        f = os.path.join(path, name)
-        try:
-            if os.path.getsize(f) > 16384:
-                continue
-            if pq.ParquetFile(f).metadata.num_rows == 0:
-                os.remove(f)
-        except OSError:
-            continue  # concurrent sweep/compaction: already gone
+    obs = Observation()
+    write(df.observe(obs, F.count(F.lit(1)).alias("n")))
+    return obs.get["n"]
 
 
 def insert_ignore_parquet(
-    spark: SparkSession, df: DataFrame, path: str, pk: list[str],
-    count_rows: bool = True,
-) -> int | None:
+    spark: SparkSession, df: DataFrame, path: str, pk: list[str]
+) -> int:
     """Append ``df`` rows to the parquet table at ``path``, skipping rows
     whose PK already exists. Returns the number of rows written.
+
+    One write job: the anti-joined frame is appended directly and its
+    row count rides that job as an ``observe`` metric. A zero-row
+    append still creates a schema-only part-file. On first contact that
+    stub is kept — it is the table's schema, so an empty first batch
+    leaves a readable zero-row table. On an existing table (an
+    all-duplicate batch, e.g. a foreachBatch replay) the stub this
+    write added is removed, so a long-lived all-duplicate stream does
+    not accrue one file per batch.
 
     A hive-partitioned target keeps its layout: appending flat
     part-files next to ``col=value/`` dirs would put leaf files at two
     directory depths and brick partition discovery for every later
-    reader — so the append re-uses the detected partition columns.
-
-    ``count_rows=False`` skips the cache+count pre-pass and writes the
-    anti-joined frame directly (ONE job instead of two), returning
-    None — for callers that don't consume the count (the ingest loop,
-    round-11 optimization, guide §1.2 'don't compute things you throw
-    away'). The written row count still rides the write job as an
-    ``observe`` metric (no extra job), and when it is ZERO — a batch
-    whose rows all already exist, e.g. a foreachBatch replay — the
-    schema-only stub part-file the append just created is swept
-    (round-12: a long-lived all-dup stream otherwise accrues one stub
-    per batch forever, pure file-listing load). The sweep deletes
-    zero-row files, which are invisible to readers by definition."""
+    reader — so the append re-uses the detected partition columns (a
+    zero-row partitioned append writes no file at all)."""
     _require_local_path(path, "insert_ignore_parquet")
     _recover_staging(spark, path)
     df = df.dropDuplicates(pk)
     part_cols: list[str] = []
+    before: set[str] | None = None
     if os.path.exists(path):
         part_cols = detect_partition_cols(path)
         existing = spark.read.parquet(path)
@@ -217,28 +204,21 @@ def insert_ignore_parquet(
                 "the frame upstream"
             )
         df = anti_new_rows(df, existing, pk)
-    if not count_rows:
-        from pyspark.sql import Observation
+        before = set(os.listdir(path))
 
-        obs = Observation()
-        df = df.observe(obs, F.count(F.lit(1)).alias("n"))
-        writer = df.write.mode("append")
+    def _append(out: DataFrame) -> None:
+        writer = out.write.mode("append")
         if part_cols:
             writer = writer.partitionBy(*part_cols)
         writer.parquet(path)
-        if obs.get["n"] == 0:
-            _sweep_empty_stubs(path)
-        return None
-    df = df.cache()
-    try:
-        n = df.count()
-        if n:
-            writer = df.write.mode("append")
-            if part_cols:
-                writer = writer.partitionBy(*part_cols)
-            writer.parquet(path)
-    finally:
-        df.unpersist()
+
+    n = _observed_write(df, _append)
+    if n == 0 and before is not None:
+        # only this write's own stub (and its .crc) goes: files listed
+        # before the write are never opened or deleted
+        for name in set(os.listdir(path)) - before:
+            if name.endswith((".parquet", ".parquet.crc")):
+                os.remove(os.path.join(path, name))
     return n
 
 
@@ -253,9 +233,10 @@ def insert_ignore_jdbc(
     quote: str = '"',
 ) -> int:
     """JDBC variant: anti-join against the target's current PKs (pushed
-    as a key-only JDBC read), then batched append. ``batchsize`` mirrors
-    the reference's PG executemany page size of 5000
-    (``/root/reference/dbcut/database.py:479-484``).
+    as a key-only JDBC read), then one batched append whose row count
+    rides the write as an ``observe`` metric. Returns the rows written.
+    ``batchsize`` mirrors the reference's PG executemany page size of
+    5000 (reference ``dbcut/database.py:479-484``).
 
     Column identifiers in the key query are quoted (``quote``, pass a
     backtick for mysql): Spark's JDBC writer creates delimited —
@@ -264,6 +245,8 @@ def insert_ignore_jdbc(
     them. The table name is passed through verbatim, exactly as it was
     given to the writer's ``dbtable`` (which Spark also leaves
     unquoted)."""
+    from dbcut_spark.sources.jdbc import write_append
+
     props = dict(properties or {})
     q = quote
     key_cols = ", ".join(f"{q}{c}{q}" for c in pk)
@@ -279,22 +262,12 @@ def insert_ignore_jdbc(
     # rows through the driver (8 GB broadcast cap / driver OOM) on a
     # large target, the same reasoning as the parquet variant above
     out = df.dropDuplicates(pk).join(existing, on=pk, how="left_anti")
-    out = out.cache()
-    try:
-        n = out.count()
-        if n:
-            (
-                out.write.format("jdbc")
-                .option("url", url)
-                .option("dbtable", table)
-                .option("batchsize", str(batchsize))
-                .options(**props)
-                .mode("append")
-                .save()
-            )
-    finally:
-        out.unpersist()
-    return n
+    return _observed_write(
+        out,
+        lambda o: write_append(
+            o, url, table, batchsize=batchsize, properties=props
+        ),
+    )
 
 
 def detect_partition_cols(path: str) -> list[str]:
@@ -1158,33 +1131,43 @@ def jdbc_delete_keys(
         keys.unpersist()
 
 
-def jdbc_insert_auto(spark, df, url: str, table: str, pk: list[str]) -> int:
-    """First-contact-aware JDBC insert, shared by the CLI and the
-    Engine facade: create-and-append when the table doesn't exist yet
-    (Spark's JDBC append-mode writer emits the dialect's CREATE TABLE,
-    mirroring the reference's ``create_all``), idempotent insert-ignore
-    after. The deduped frame is cached around count+write so the
-    closure DAG feeding it computes once, not once per action (the
-    same guard the insert_ignore_* primitives use)."""
+def insert_ignore(
+    spark: SparkSession,
+    df: DataFrame,
+    destination: str,
+    table: str,
+    pk: list[str],
+) -> int:
+    """Insert-ignore one extraction frame into a load destination — the
+    single router the CLI ``load`` and ``Engine.load`` share. Returns
+    the rows written.
+
+    A ``jdbc:`` destination is first-contact aware: when the table does
+    not exist yet, Spark's JDBC append-mode writer emits the dialect's
+    CREATE TABLE (mirroring the reference's ``create_all``) and the
+    deduped frame is appended, even when empty; after that, inserts go
+    through :func:`insert_ignore_jdbc`. Any other destination is a
+    directory holding ``<table>.parquet`` per table."""
+    if not destination.startswith("jdbc:"):
+        return insert_ignore_parquet(
+            spark, df, os.path.join(destination, f"{table}.parquet"), pk
+        )
     from dbcut_spark.sources.jdbc import (
         jdbc_table_exists,
         url_dialect,
         write_append,
     )
 
-    if not jdbc_table_exists(spark, url, table):
-        out = df.dropDuplicates(pk).cache()
-        try:
-            n = out.count()
-            write_append(out, url, table)
-        finally:
-            out.unpersist()
-        return n
+    if not jdbc_table_exists(spark, destination, table):
+        return _observed_write(
+            df.dropDuplicates(pk),
+            lambda o: write_append(o, destination, table),
+        )
     # dialect-correct identifier quote: in default MySQL sql_mode a
     # double-quoted "id" is a STRING LITERAL, so the existing-keys
     # probe would select a constant per row, the anti-join would match
     # nothing, and every retry re-appended the full frame — silently
     # breaking the exact idempotency this sink exists for (round-11
     # review; the quote parameter existed but was never plumbed here)
-    quote = "`" if url_dialect(url) == "mysql" else '"'
-    return insert_ignore_jdbc(spark, df, url, table, pk, quote=quote)
+    quote = "`" if url_dialect(destination) == "mysql" else '"'
+    return insert_ignore_jdbc(spark, df, destination, table, pk, quote=quote)

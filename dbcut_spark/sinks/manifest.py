@@ -195,15 +195,17 @@ def current_version(table_path: str) -> int | None:
 # on a vanilla SparkSession — so every _stage write pins the conf for
 # its duration. Refcounted per-session under a lock because _stage runs
 # concurrently from the staging thread pools (MOR commit, ingest loop)
-# and the SQL conf is session-global, not thread-local.
+# and the SQL conf is session-global, not thread-local. The refcount is
+# keyed on the JVM session, not the Python wrapper: two wrappers over
+# one JVM session share its conf, so they must share one refcount too.
 _TS_CONF_KEY = "spark.sql.parquet.outputTimestampType"
 _TS_CONF_LOCK = threading.Lock()
-_TS_CONF_STATE: dict[int, list] = {}  # id(session) -> [depth, saved]
+_TS_CONF_STATE: dict[str, list] = {}  # JVM session UUID -> [depth, saved]
 
 
 @contextmanager
 def _stats_bearing_timestamps(spark: SparkSession):
-    sid = id(spark)
+    sid = spark._jsparkSession.sessionUUID()
     with _TS_CONF_LOCK:
         st = _TS_CONF_STATE.get(sid)
         if st is None:

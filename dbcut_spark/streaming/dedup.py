@@ -149,7 +149,7 @@ def dedup_ingest_batch(
         with ThreadPoolExecutor(max_workers=2) as pool:
             fc = pool.submit(
                 insert_ignore_parquet, spark, accepted, corpus_path,
-                [id_col], count_rows=False,
+                [id_col],
             )
             fs = (
                 pool.submit(
@@ -189,7 +189,7 @@ def dedup_ingest_batch(
         with ThreadPoolExecutor(max_workers=2) as pool:
             fc = pool.submit(
                 insert_ignore_parquet, spark, accepted, corpus_path,
-                [id_col], count_rows=False,
+                [id_col],
             )
             fs = pool.submit(
                 lsh_index_stage, index_path, accepted, text_col, id_col,

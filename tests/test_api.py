@@ -114,7 +114,11 @@ def test_engine_compact(spark, sf_dir, tmp_path):
     dest = str(tmp_path / "tgt")
     frames = eng.extract({"from": "nation", "limit": 25, "join_depth": 0,
                           "backref_depth": 0})
-    eng.load({"nation": frames["nation"].repartition(5)}, dest)
+    # two appends fragment the target: an insert writes one file per
+    # write task, and a 25-row frame is a single task after AQE
+    nation = frames["nation"]
+    eng.load({"nation": nation.filter("n_nationkey < 12")}, dest)
+    eng.load({"nation": nation.filter("n_nationkey >= 12")}, dest)
     path = f"{dest}/nation.parquet"
     assert data_file_stats(path)[0] >= 2
     # threshold mode: already-healthy average skips the rewrite

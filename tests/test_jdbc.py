@@ -219,10 +219,16 @@ def test_live_jdbc_roundtrip_derby(spark, tmp_path):
         "id AS o_orderkey", "CAST(id % 7 AS INT) AS o_custkey",
         "CAST(id * 1.5 AS DOUBLE) AS o_totalprice",
     )
-    insert_ignore_jdbc(spark, more, url, "orders", ["o_orderkey"], batchsize=100)
+    n = insert_ignore_jdbc(
+        spark, more, url, "orders", ["o_orderkey"], batchsize=100
+    )
+    assert n == 100
     assert read_table(spark, url, "orders", plan).count() == 1100
     # idempotent: second run inserts nothing
-    insert_ignore_jdbc(spark, more, url, "orders", ["o_orderkey"], batchsize=100)
+    n = insert_ignore_jdbc(
+        spark, more, url, "orders", ["o_orderkey"], batchsize=100
+    )
+    assert n == 0
     assert read_table(spark, url, "orders", plan).count() == 1100
 
 
@@ -555,7 +561,7 @@ def test_cli_load_from_live_jdbc_source(spark, tmp_path):
 
     ctx = Ctx(cfg_path, no_cache=True, force_refresh=False, only=())
     ctx._spark = spark
-    ex = ctx.executor()
+    ex = ctx.engine.executor
     assert ex.table_rows is not None
     assert ex._source_rows("PETS") == 4
     assert ex._source_rows("OWNERS") == 3

@@ -38,26 +38,124 @@ def test_insert_ignore_idempotent(spark, sf_dir, tmp_path):
 
 
 def test_insert_ignore_countless_sweeps_all_dup_stubs(spark, tmp_path):
-    """count_rows=False must not accrue schema-only stub part-files on
+    """Inserts must not accrue schema-only stub part-files on
     all-duplicate batches (foreachBatch replays): the written row count
     rides the write job as an observe metric, and a zero-row batch
-    sweeps the stubs it (and earlier batches) left. Rows and
-    idempotency unchanged (round-12, verdict what's-wrong #2)."""
+    removes the stub it added. Rows and idempotency unchanged."""
     import glob
 
     df = spark.range(10).select(
         F.col("id").alias("k"), (F.col("id") * 2).alias("v")
     )
     path = str(tmp_path / "tbl")
-    insert_ignore_parquet(spark, df, path, ["k"], count_rows=False)
+    insert_ignore_parquet(spark, df, path, ["k"])
     assert spark.read.parquet(path).count() == 10
     n_files = len(glob.glob(path + "/*.parquet"))
     for _ in range(3):  # all-dup replays
-        insert_ignore_parquet(spark, df, path, ["k"], count_rows=False)
+        insert_ignore_parquet(spark, df, path, ["k"])
     assert len(glob.glob(path + "/*.parquet")) <= n_files
     got = spark.read.parquet(path)
     assert got.count() == 10
     assert got.agg(F.sum("v")).first()[0] == 90
+
+
+def test_insert_ignore_empty_first_write_leaves_readable_table(
+    spark, tmp_path
+):
+    """An empty FIRST batch must leave a readable zero-row table: its
+    schema-only part-file is the table's only schema. Sweeping it left
+    a directory without a footer, and the next insert failed with
+    UNABLE_TO_INFER_SCHEMA."""
+    df = spark.range(5).select(
+        F.col("id").alias("k"), (F.col("id") * 2).alias("v")
+    )
+    path = str(tmp_path / "tbl")
+    assert insert_ignore_parquet(spark, df.limit(0), path, ["k"]) == 0
+    empty = spark.read.parquet(path)
+    assert empty.count() == 0 and empty.columns == ["k", "v"]
+    assert insert_ignore_parquet(spark, df, path, ["k"]) == 5
+    got = spark.read.parquet(path).collect()
+    assert sorted((r.k, r.v) for r in got) == [(i, 2 * i) for i in range(5)]
+
+
+def _parquet_names(path: str) -> set[str]:
+    return {n for n in os.listdir(path) if n.endswith(".parquet")}
+
+
+def test_insert_ignore_all_dup_replay_leaves_foreign_files(spark, tmp_path):
+    """An all-duplicate replay removes only the stub it added itself.
+    Files it did not create are neither opened nor deleted: a
+    pre-existing zero-row part-file (a concurrent reader may have
+    listed it) and a truncated crash straggler under 1 KB (a footer
+    probe raised ArrowInvalid on it)."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    df = spark.range(10).select(
+        F.col("id").alias("k"), (F.col("id") * 2).alias("v")
+    )
+    path = str(tmp_path / "tbl")
+    assert insert_ignore_parquet(spark, df, path, ["k"]) == 10
+    zero = os.path.join(path, "part-00000-planted-zero.parquet")
+    pq.write_table(
+        pa.table({"k": pa.array([], pa.int64()), "v": pa.array([], pa.int64())}),
+        zero,
+    )
+    # hidden name: readers skip it, as they skip any writer's leftover
+    straggler = os.path.join(path, ".part-00001-straggler.parquet")
+    with open(straggler, "wb") as f:
+        f.write(b"PAR1" + b"\0" * 200)
+    names = _parquet_names(path)
+    for _ in range(2):
+        assert insert_ignore_parquet(spark, df, path, ["k"]) == 0
+        assert _parquet_names(path) == names
+    assert os.path.getsize(straggler) == 204
+    got = spark.read.parquet(path)
+    assert got.count() == 10
+    assert got.agg(F.sum("v")).first()[0] == 90
+
+
+def _jobs_in_group(spark, group: str, fn) -> int:
+    """Spark jobs ``fn()`` starts, counted through a job group."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setJobGroup(None, None)
+    # job-start events reach the status store through the listener bus
+    sc._jsc.sc().listenerBus().waitUntilEmpty(10_000)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_insert_ignore_jobs_match_plain_anti_join_append(spark, tmp_path):
+    """The insert is the anti-joined append and nothing more: no count
+    pre-pass, no cache. It issues no more Spark jobs than the plain
+    append of ``anti_new_rows`` over the same inputs."""
+    from dbcut_spark.sinks.insert_ignore import anti_new_rows
+
+    def frame(lo, hi):
+        return spark.range(lo, hi).select(
+            F.col("id").alias("k"), (F.col("id") * 2).alias("v")
+        )
+
+    a, b = str(tmp_path / "a"), str(tmp_path / "b")
+    for p in (a, b):
+        frame(0, 20).write.parquet(p)
+
+    def plain():
+        existing = spark.read.parquet(b)
+        anti_new_rows(
+            frame(10, 30).dropDuplicates(["k"]), existing, ["k"]
+        ).write.mode("append").parquet(b)
+
+    n_insert = _jobs_in_group(
+        spark, "ii-insert",
+        lambda: insert_ignore_parquet(spark, frame(10, 30), a, ["k"]),
+    )
+    n_plain = _jobs_in_group(spark, "ii-plain", plain)
+    assert 0 < n_insert <= n_plain, (n_insert, n_plain)
+    assert spark.read.parquet(a).count() == spark.read.parquet(b).count() == 30
 
 
 def test_nested_documents(spark, sf_dir):
@@ -2682,6 +2780,45 @@ def test_manifest_stats_timestamp_prunes_under_vanilla_session(spark, tmp_path):
             F.col("ts") >= F.lit(cut)
         ).count()
         # the caller's conf came back untouched
+        assert spark.conf.get(key) == "INT96"
+    finally:
+        spark.conf.set(key, saved)
+
+
+def test_timestamp_pin_shared_across_wrappers_of_one_jvm_session(spark):
+    """Two Python SparkSession wrappers over ONE JVM session share its
+    conf, so the staged-write timestamp pin must refcount them as one:
+    while either pin is active the conf stays TIMESTAMP_MICROS, and the
+    caller's value comes back only when the last one exits. Keyed on
+    the wrapper's id(), the first exit restored INT96 under the other
+    wrapper's running write, and the last exit left MICROS behind."""
+    from pyspark.sql import SparkSession
+
+    from dbcut_spark.sinks.manifest import _stats_bearing_timestamps
+
+    key = "spark.sql.parquet.outputTimestampType"
+    twin = SparkSession(spark.sparkContext, spark._jsparkSession)
+    assert twin is not spark
+    saved = spark.conf.get(key)
+    spark.conf.set(key, "INT96")
+    try:
+        outer = _stats_bearing_timestamps(spark)
+        inner = _stats_bearing_timestamps(twin)
+        outer.__enter__()
+        inner.__enter__()
+        assert spark.conf.get(key) == "TIMESTAMP_MICROS"
+        inner.__exit__(None, None, None)
+        assert spark.conf.get(key) == "TIMESTAMP_MICROS"
+        outer.__exit__(None, None, None)
+        assert spark.conf.get(key) == "INT96"
+        # overlapping, not nested: the first-entered exits first
+        first = _stats_bearing_timestamps(spark)
+        second = _stats_bearing_timestamps(twin)
+        first.__enter__()
+        second.__enter__()
+        first.__exit__(None, None, None)
+        assert spark.conf.get(key) == "TIMESTAMP_MICROS"
+        second.__exit__(None, None, None)
         assert spark.conf.get(key) == "INT96"
     finally:
         spark.conf.set(key, saved)
