@@ -393,7 +393,6 @@ def main() -> None:
         isolate_main(names, sf_dir, sf)
         return
 
-    from dbcut_spark.operators.pinning import release_pinned
     from dbcut_spark.queries import QUERIES
     from dbcut_spark.session import get_spark
 
@@ -414,18 +413,10 @@ def main() -> None:
     timings: dict[str, float] = {}
     total = 0.0
     for name in selected:
-        fn = QUERIES[name]
         # steady-state: best of 3 runs (the first pays whole-stage-codegen
         # JIT + Python-worker startup, and single repeats still catch GC
         # pauses — best-of-3 keeps per-query timings stable run-to-run)
-        best, n = None, 0
-        for _ in range(3):
-            start = time.perf_counter()
-            n = fn(spark, sf_dir).count()
-            dt = time.perf_counter() - start
-            best = dt if best is None else min(best, dt)
-        release_pinned()
-        spark.catalog.clearCache()
+        best, _runs, n = _run_one(spark, sf_dir, name)
         # JVM GC between queries: without it, heap pressure built up by
         # earlier queries bleeds into later timings (observed 2-4x
         # run-to-run swings on the tail of the 100-query session)

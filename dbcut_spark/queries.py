@@ -905,11 +905,13 @@ def _detect_round() -> int:
 
 
 def _driver_sampled_before(round_no: int) -> set[str]:
-    """Union of query names holding a driver CORRECTNESS row in any
-    round BEFORE ``round_no`` — read from the CORRECTNESS_r*.json
-    artifacts committed at the repo root. Deterministic per round: the
-    artifacts for rounds < N are frozen by the time round N's window is
-    computed."""
+    """Union of query names holding a PASSING driver CORRECTNESS row in
+    any round BEFORE ``round_no`` — read from the CORRECTNESS_r*.json
+    artifacts committed at the repo root. A row with an ``err`` or any
+    ``*_match: false`` does not count: a query that failed its only
+    sample re-enters the window until it passes once. Deterministic per
+    round: the artifacts for rounds < N are frozen by the time round
+    N's window is computed."""
     import glob
     import json
     import os
@@ -923,9 +925,17 @@ def _driver_sampled_before(round_no: int) -> set[str]:
             continue
         try:
             with open(p) as fh:
-                sampled.update(json.load(fh).keys())
+                rows = json.load(fh)
         except (OSError, ValueError):
             continue
+        sampled.update(
+            name
+            for name, row in rows.items()
+            if not row.get("err")
+            and not any(
+                k.endswith("_match") and v is False for k, v in row.items()
+            )
+        )
     return sampled
 
 

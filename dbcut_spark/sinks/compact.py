@@ -8,8 +8,8 @@ Spark-first shape, no driver-side per-partition loops:
 
 - unpartitioned target: one ``repartition(target_n)`` rewrite where
   ``target_n = ceil(total_bytes / target_file_bytes)`` from the actual
-  on-disk footprint — one shuffle, then the staging-swap used by the
-  other rewrite sinks;
+  on-disk footprint — one shuffle, then the one staged table swap of
+  the other rewrite sinks (``insert_ignore._replace_table``);
 - hive-partitioned target: each partition's target file count is
   derived from its actual row share of the on-disk footprint
   (``ceil(rows_i x bytes_per_row / target)``), a rand-free salt in
@@ -29,11 +29,15 @@ rewrite-based sink here).
 from __future__ import annotations
 
 import os
-import shutil
 
 from pyspark.sql import SparkSession
 
-from dbcut_spark.sinks.insert_ignore import detect_partition_cols
+from dbcut_spark.sinks.insert_ignore import (
+    _recover_staging,
+    _replace_table,
+    _require_local_path,
+    detect_partition_cols,
+)
 
 DEFAULT_TARGET_FILE_MB = 128
 
@@ -80,7 +84,14 @@ def compact_parquet(
     (cell 0) rather than scattering — layout-only, content never
     changes. Unpartitioned layouts only — z-ordering inside hive
     partitions would silently interact with the partition pruning
-    story; raise instead (round-9 verdict ask #6)."""
+    story; raise instead (round-9 verdict ask #6).
+
+    Each branch only builds the output frame; the rewrite is the staged
+    table swap every parquet writer uses (``insert_ignore._replace_table``,
+    one ``.__staging__`` suffix), after the scheme-URI check and the
+    crash recovery (``_recover_staging``) the other writers run first."""
+    _require_local_path(path, "compact_parquet")
+    _recover_staging(spark, path)
     n_before, total = data_file_stats(path)
     # the fragmentation gate applies ONLY to size-maintenance rewrites:
     # a z-order request is a LAYOUT change, and large-but-scattered
@@ -108,9 +119,6 @@ def compact_parquet(
             "individually"
         )
     df = spark.read.parquet(path)
-    staged = path + ".__compact__"
-    if os.path.exists(staged):
-        shutil.rmtree(staged)
     if part_cols:
         import math
 
@@ -192,10 +200,6 @@ def compact_parquet(
             .repartition(*part_cols, "__dbcut_salt")
             .drop("__dbcut_salt", "__nfiles", *[f"__pv_{c}" for c in part_cols])
         )
-        writer = out.write.mode("overwrite")
-        if max_records_per_file:
-            writer = writer.option("maxRecordsPerFile", str(max_records_per_file))
-        writer.partitionBy(*part_cols).parquet(staged)
     elif zorder:
         from pyspark.sql import functions as F
         from pyspark.sql import types as T
@@ -260,22 +264,14 @@ def compact_parquet(
             zorder_bits,
         )
         target_n = max(1, -(-total // (target_file_mb * 1024 * 1024)))
-        writer = (
-            df.repartitionByRange(target_n, z)
-            .sortWithinPartitions(z)
-            .write.mode("overwrite")
-        )
-        if max_records_per_file:
-            writer = writer.option("maxRecordsPerFile", str(max_records_per_file))
-        writer.parquet(staged)
+        out = df.repartitionByRange(target_n, z).sortWithinPartitions(z)
     else:
         target_n = max(1, -(-total // (target_file_mb * 1024 * 1024)))
-        writer = df.repartition(target_n).write.mode("overwrite")
-        if max_records_per_file:
-            writer = writer.option("maxRecordsPerFile", str(max_records_per_file))
-        writer.parquet(staged)
-    shutil.rmtree(path)
-    os.rename(staged, path)
-    spark.catalog.refreshByPath(path)
+        out = df.repartition(target_n)
+    options = (
+        {"maxRecordsPerFile": str(max_records_per_file)}
+        if max_records_per_file else None
+    )
+    _replace_table(spark, path, out, part_cols, options)
     n_after, _ = data_file_stats(path)
     return {"files_before": n_before, "files_after": n_after, "bytes": total}

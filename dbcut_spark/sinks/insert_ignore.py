@@ -61,90 +61,130 @@ def _require_local_path(path: str, op: str) -> None:
         )
 
 
+_STAGING_SUFFIX = ".__staging__"
 _PRUNED_SUFFIX = ".__pruned__"
 _TOUCHED_MARKER = "_DBCUT_TOUCHED"
 
 
+def _staging_complete(staged: str) -> bool:
+    """A staged table is complete when its writer committed
+    (``_SUCCESS``) AND it holds at least one data file: a zero-row
+    partitioned write commits a directory holding only ``_SUCCESS``,
+    from which no reader can infer a schema."""
+    if not os.path.exists(os.path.join(staged, "_SUCCESS")):
+        return False
+    return any(
+        not name.startswith(("_", "."))
+        for _base, _dirs, files in os.walk(staged)
+        for name in files
+    )
+
+
 def _recover_staging(spark: SparkSession, path: str) -> None:
-    """Crash-recovery preamble for the staging-swap writers. Without
-    it, a writer that died between ``shutil.rmtree(path)`` and
-    ``os.rename(staged, path)`` leaves the table missing — and the
-    RETRY would take the first-contact branch and silently rebuild the
-    table from the delta alone, losing every pre-existing row.
+    """Crash-recovery preamble for the staging-swap writers (insert,
+    upsert, delete, compaction). Without it, a writer that died between
+    ``shutil.rmtree(path)`` and ``os.rename(staged, path)`` leaves the
+    table missing, and the RETRY would take the first-contact branch
+    and silently rebuild the table from the delta alone.
 
-    Partition-PRUNED swaps stage under a DISTINCT suffix
-    (``.__pruned__``) holding only the touched partitions — they must
-    never take the full-table swap below, which would replace the
-    whole table with the touched slice and silently delete every
-    untouched partition (round-10 ADVICE, high). They recover via
-    :func:`_recover_pruned` first: the staged dir carries a fsync'd
-    ``_DBCUT_TOUCHED`` marker written before any target mutation, so
-    the partition-wise swap can be idempotently re-applied.
+    Every full-table rewrite stages the COMPLETE table under one
+    suffix, ``.__staging__`` (:func:`_replace_table`), and removes the
+    target only once the staging is complete: ``_SUCCESS`` plus at
+    least one data file (:func:`_staging_complete`). So:
 
-    Full-rewrite swaps (``.__staging__`` / ``.__empty__``, the staged
-    dir holds the COMPLETE table):
+    - staging complete: the crash was after the staged write, possibly
+      MID-rmtree of the target (rmtree is not atomic). The staging is
+      the one provably complete copy of the intended state, so the swap
+      is COMPLETED, never discarded (round-10 second-pass review);
+      under the single-writer contract its state equals or succeeds
+      the target's.
+    - staging incomplete, target present: a crash mid-staged-write;
+      the target was never touched — discard the staging.
+    - staging incomplete, target missing: unreachable from that step
+      order, so outside interference — raise rather than guess.
 
-    - target missing + staging COMPLETE (_SUCCESS marker): the crash
-      was between rmtree and rename — complete the swap; the staged
-      dir holds the full merged table.
-    - target missing + staging incomplete: not reachable from this
-      module's step order (the target is only removed after the
-      staged write succeeded), so it means outside interference —
-      raise rather than guess.
-    - target present + staging COMPLETE (_SUCCESS): the crash was
-      between the staged write and the end of the swap — possibly
-      MID-rmtree of the target (rmtree is not atomic), leaving the
-      target missing part-files. The staged dir is the one provably
-      complete copy of that operation's intended state, so the swap
-      is COMPLETED, never the staging discarded (discarding and then
-      merging against a half-deleted target would silently lose the
-      deleted part-files' rows; round-10 second-pass review). Under
-      this module's single-writer contract, at most one operation's
-      leftover can exist, and its staged state either equals or
-      strictly succeeds the target.
-    - target present + staging INCOMPLETE (no _SUCCESS): a crash
-      mid-staged-write; the target was never touched — discard the
-      partial staging."""
+    Partition-PRUNED swaps stage only the touched partitions under
+    ``.__pruned__`` and must never take the full-table swap, which
+    would delete every untouched partition (round-10 ADVICE, high):
+    :func:`_recover_pruned` re-applies them from their fsync'd
+    ``_DBCUT_TOUCHED`` intent marker. It runs second: a pruned delete
+    that emptied every partition ends with a full rewrite to a schema
+    stub, and a crash inside that rewrite may have removed the table."""
     import shutil
 
-    _recover_pruned(spark, path)
-    # __empty__ first: in the delete path it is created AFTER the
-    # staging dir, so when both survive a crash it is the intended
-    # final state (a leftover post-swap staging dir may hold only a
-    # _SUCCESS marker and would 'recover' into an unreadable table)
-    for suffix in (".__empty__", ".__staging__"):
-        staged = path + suffix
-        if not os.path.exists(staged):
-            continue
-        complete = os.path.exists(os.path.join(staged, "_SUCCESS"))
-        if os.path.exists(path):
-            if complete:
+    staged = path + _STAGING_SUFFIX
+    if os.path.exists(staged):
+        if _staging_complete(staged):
+            if os.path.exists(path):
                 shutil.rmtree(path)
-                os.rename(staged, path)
-            else:
-                shutil.rmtree(staged)
-            spark.catalog.refreshByPath(path)
-        elif complete:
             os.rename(staged, path)
-            spark.catalog.refreshByPath(path)
+        elif os.path.exists(path):
+            shutil.rmtree(staged)
         else:
             raise RuntimeError(
                 f"torn swap at {path!r}: the table directory is gone "
-                f"and the leftover {staged!r} carries no _SUCCESS "
-                "marker — refusing to guess; restore one of them "
-                "manually"
+                f"and the leftover {staged!r} is incomplete (no "
+                "_SUCCESS marker or no data file) — refusing to guess; "
+                "restore one of them manually"
             )
+        spark.catalog.refreshByPath(path)
+    _recover_pruned(spark, path)
 
 
 def _observed_write(df: DataFrame, write) -> int:
     """Run ``write(df)`` and return the number of rows it wrote. The
     count rides the write job itself as an ``observe`` metric: no
-    cache, no separate count job, and the frame's lineage runs once."""
+    cache, no separate count job, and the frame's lineage runs once.
+    Observe only the frame being written: an observation on a join
+    INPUT whose side AQE finds empty at runtime fails
+    ``Observation.get``."""
     from pyspark.sql import Observation
 
     obs = Observation()
     write(df.observe(obs, F.count(F.lit(1)).alias("n")))
     return obs.get["n"]
+
+
+def _overwrite(
+    out: DataFrame, dest: str, part_cols=(), options: dict | None = None
+) -> None:
+    writer = out.write.mode("overwrite").options(**(options or {}))
+    if part_cols:
+        writer = writer.partitionBy(*part_cols)
+    writer.parquet(dest)
+
+
+def _replace_table(
+    spark: SparkSession,
+    path: str,
+    out: DataFrame,
+    part_cols=(),
+    options: dict | None = None,
+) -> int:
+    """Replace the table at ``path`` with ``out`` — the one full-table
+    rewrite every writer uses. Returns the rows written.
+
+    ``out`` is written (hive-partitioned by ``part_cols``, writer
+    ``options`` passed through) to ``path + ".__staging__"`` with its
+    row count riding that job (:func:`_observed_write`); only then is
+    the target removed and the staging renamed in, and the session's
+    file listing refreshed. A partitioned write of zero rows commits a
+    directory holding only ``_SUCCESS``, so the staging is first
+    rewritten as a flat zero-row schema stub: the swapped-in table is
+    always readable. A crash at any step is recovered by
+    :func:`_recover_staging`."""
+    import shutil
+
+    staged = path + _STAGING_SUFFIX
+    n = _observed_write(
+        out, lambda o: _overwrite(o, staged, part_cols, options)
+    )
+    if n == 0 and part_cols:
+        _overwrite(out.limit(0), staged)
+    shutil.rmtree(path)
+    os.rename(staged, path)
+    spark.catalog.refreshByPath(path)
+    return n
 
 
 def insert_ignore_parquet(
@@ -476,7 +516,7 @@ def _write_touched_marker(
                 # full table schema (partition cols as plain cols): lets
                 # recovery leave a READABLE empty table when a delete
                 # emptied every partition and crashed mid-swap — the
-                # same .__empty__ normalization the non-crash flow does
+                # same schema-stub rewrite the non-crash flow does
                 "schema": schema_json,
             },
             f,
@@ -589,12 +629,7 @@ def _recover_pruned(spark: SparkSession, path: str) -> None:
         from pyspark.sql.types import StructType
 
         schema = StructType.fromJson(json.loads(intent["schema"]))
-        empty_staged = path + ".__empty__"
-        spark.createDataFrame([], schema).write.mode("overwrite").parquet(
-            empty_staged
-        )
-        shutil.rmtree(path)
-        os.rename(empty_staged, path)
+        _replace_table(spark, path, spark.createDataFrame([], schema))
     shutil.rmtree(staged)
     spark.catalog.refreshByPath(path)
 
@@ -668,8 +703,6 @@ def upsert_parquet(
     - ``"add"``: widen the target — existing rows get NULL backfill
       for the new columns (``unionByName(allowMissingColumns=True)``).
     """
-    import shutil
-
     if schema_evolution not in ("strict", "add"):
         raise ValueError(
             f"schema_evolution must be 'strict' or 'add', got "
@@ -679,12 +712,8 @@ def upsert_parquet(
     _recover_staging(spark, path)
     df = df.dropDuplicates(pk)
     if not os.path.exists(path):
-        if not counts:
-            df.write.parquet(path)
-            return None, None
-        n = df.count()
-        df.write.parquet(path)
-        return 0, n
+        n = _observed_write(df, lambda o: o.write.parquet(path))
+        return (0, n) if counts else (None, None)
     part_cols = detect_partition_cols(path)
     existing = spark.read.parquet(path)
     extra_cols = [c for c in df.columns if c not in existing.columns]
@@ -713,34 +742,12 @@ def upsert_parquet(
             # nothing to merge — don't rewrite the table (a delete-only
             # CDC micro-batch reaches here with an empty upsert side)
             return 0, 0
-        if part_cols and (
+        if part_cols and not (
             extra_cols
             or not _pruned_swap_safe(existing.schema, part_cols, df.schema)
             or _delta_has_empty_partition_value(df, part_cols)
         ):
-            # full partitioned rewrite, two cases: (a) widening is
-            # table-wide — a pruned rewrite would leave untouched
-            # partition files without the new column, and an unmerged
-            # read (Spark defaults to one footer's schema) would drop
-            # or break on it; (b) float/timestamp/decimal partition
-            # values, whose Python path rendering can drift from
-            # Spark's encoding (the emptied-partition cleanup would
-            # miss, leaving stale duplicate-PK rows)
-            keep = anti_new_rows(existing, df, pk)
-            updated = (
-                incoming - anti_new_rows(df, existing, pk).count()
-                if counts else None
-            )
-            staged = path + ".__staging__"
-            (
-                _merged(keep)
-                .write.mode("overwrite")
-                .partitionBy(*part_cols)
-                .parquet(staged)
-            )
-            shutil.rmtree(path)
-            os.rename(staged, path)
-        elif part_cols:  # full rows guaranteed by the missing-col guard
+            # full rows guaranteed by the missing-col guard
             inc_parts = df.select(*part_cols).distinct()
             old_parts = (
                 existing.join(df.select(*pk), on=pk, how="left_semi")
@@ -755,27 +762,29 @@ def upsert_parquet(
                 if counts else None
             )
             staged = path + _PRUNED_SUFFIX
-            (
-                _merged(keep)
-                .write.mode("overwrite")
-                .partitionBy(*part_cols)
-                .parquet(staged)
-            )
+            _overwrite(_merged(keep), staged, part_cols)
             _swap_touched_partitions(
                 staged, path, part_cols, touched, keep.schema.json()
             )
+            # the session caches file listings per path; the swap
+            # invalidated them
+            spark.catalog.refreshByPath(path)
         else:
+            # full rewrite (partitioned layouts keep their layout), for
+            # unpartitioned targets and two partitioned cases: (a)
+            # widening is table-wide — a pruned rewrite would leave
+            # untouched partition files without the new column, and an
+            # unmerged read (Spark defaults to one footer's schema)
+            # would drop or break on it; (b) float/timestamp/decimal
+            # partition values, whose Python path rendering can drift
+            # from Spark's encoding (the emptied-partition cleanup
+            # would miss, leaving stale duplicate-PK rows)
             keep = anti_new_rows(existing, df, pk)
             updated = (
                 incoming - anti_new_rows(df, existing, pk).count()
                 if counts else None
             )
-            staged = path + ".__staging__"
-            _merged(keep).write.mode("overwrite").parquet(staged)
-            shutil.rmtree(path)
-            os.rename(staged, path)
-        # the session caches file listings per path; the swap invalidated them
-        spark.catalog.refreshByPath(path)
+            _replace_table(spark, path, _merged(keep), part_cols)
         if not counts:
             return None, None
         return updated, incoming - updated
@@ -791,10 +800,12 @@ def delete_keys_parquet(
     the rows whose PK appears in ``df_keys`` (left-anti join). Returns
     the number of rows deleted.
 
-    ``counts=False`` returns None and skips the before/after count
-    jobs whose only purpose is that return value (two extra scans per
-    delete); the rewrite, the emptied-partition normalization, and the
-    swap are unchanged (round-11 optimization, guide §1.2).
+    ``counts=False`` returns None and skips the before-count job whose
+    only purpose is that return value; the rows kept are counted on
+    the rewrite job itself (an ``observe`` metric), never by reading
+    the staged output back. The rewrite, the emptied-partition
+    normalization, and the swap are unchanged (round-11 optimization,
+    guide §1.2).
 
     Scale: on a hive-partitioned target, the partitions containing the
     doomed keys are found with a key-semi-join over a column-pruned
@@ -810,34 +821,7 @@ def delete_keys_parquet(
     part_cols = detect_partition_cols(path)
     existing = spark.read.parquet(path)
     keys = df_keys.select(*pk).dropDuplicates(pk)
-    def _full_partitioned_delete() -> int:
-        # full rewrite (layout preserved) instead of risking stale
-        # rows: taken for float/timestamp/decimal partition values
-        # (Python path rendering can drift from Spark's encoding) and
-        # for detected lossy round-trips (below)
-        remaining = anti_new_rows(existing, keys, pk)
-        n_before = existing.count() if counts else 0
-        staged = path + ".__staging__"
-        remaining.write.mode("overwrite").partitionBy(*part_cols).parquet(
-            staged
-        )
-        has_rows = bool(_staged_partition_dirs(staged, len(part_cols)))
-        n_after = (
-            spark.read.parquet(staged).count() if has_rows and counts else 0
-        )
-        if not has_rows:
-            # all rows deleted: a dir of only _SUCCESS is unreadable —
-            # leave a readable empty table carrying the full schema
-            shutil.rmtree(staged)
-            remaining.limit(0).write.mode("overwrite").parquet(staged)
-        shutil.rmtree(path)
-        os.rename(staged, path)
-        spark.catalog.refreshByPath(path)
-        return n_before - n_after if counts else None
-
-    if part_cols and not _pruned_swap_safe(existing.schema, part_cols):
-        return _full_partitioned_delete()
-    if part_cols:
+    if part_cols and _pruned_swap_safe(existing.schema, part_cols):
         touched = (
             existing.join(keys, on=pk, how="left_semi")
             .select(*part_cols)
@@ -846,65 +830,51 @@ def delete_keys_parquet(
         )
         if not touched:
             return 0
-        if any(
-            not os.path.isdir(
-                os.path.join(path, _partition_reldir(part_cols, r))
-            )
+        # every touched value came FROM the target, so its TRUE dir
+        # exists on disk — a rendered dir that does not is a lossy path
+        # round-trip the type gate could not see (e.g. a string column
+        # whose values all LOOK integral, '01' read back as 1): the
+        # pruned swap would write c=1 beside the real c=01, leaving
+        # doomed rows alive and duplicating the survivors (round-11
+        # review). Those take the full rewrite below.
+        if all(
+            os.path.isdir(os.path.join(path, _partition_reldir(part_cols, r)))
             for r in touched
         ):
-            # every touched value came FROM the target, so its TRUE dir
-            # exists on disk — a rendered dir that does not is a lossy
-            # path round-trip the type gate could not see (e.g. a
-            # string column whose values all LOOK integral, '01' read
-            # back as 1): the pruned swap would write c=1 beside the
-            # real c=01, leaving doomed rows alive and duplicating the
-            # survivors (round-11 review). Full rewrite instead.
-            return _full_partitioned_delete()
-        scoped = existing.filter(_partition_filter(part_cols, touched))
-        remaining = anti_new_rows(scoped, keys, pk)
-        n_before = scoped.count() if counts else 0
-        staged = path + _PRUNED_SUFFIX
-        remaining.write.mode("overwrite").partitionBy(*part_cols).parquet(staged)
-        # every touched partition emptied ⇒ staged holds only _SUCCESS,
-        # which parquet cannot infer a schema from
-        n_after = (
-            spark.read.parquet(staged).count()
-            if counts and _staged_partition_dirs(staged, len(part_cols))
-            else 0
-        )
-        # cleanup deferred: the staging dir's marker must outlive the
-        # empty-table normalization below — a crash between the swap
-        # and the normalization used to strand an unreadable table
-        # with nothing left for recovery to re-run (round-11 review)
-        _swap_touched_partitions(
-            staged, path, part_cols, touched, remaining.schema.json(),
-            cleanup=False,
-        )
-        if not any(
-            e.is_dir() and "=" in e.name for e in os.scandir(path)
-        ):
-            # every partition emptied — a dir holding only _SUCCESS is
-            # unreadable ("unable to infer schema"); leave a readable
-            # empty table carrying the full schema instead (the
-            # unpartitioned branch's behavior for the same case)
-            empty_staged = path + ".__empty__"
-            remaining.limit(0).write.mode("overwrite").parquet(empty_staged)
-            shutil.rmtree(path)
-            os.rename(empty_staged, path)
-        shutil.rmtree(staged)
-        spark.catalog.refreshByPath(path)
-        return n_before - n_after if counts else None
-    remaining = anti_new_rows(existing, keys, pk)
+            scoped = existing.filter(_partition_filter(part_cols, touched))
+            remaining = anti_new_rows(scoped, keys, pk)
+            n_before = scoped.count() if counts else 0
+            staged = path + _PRUNED_SUFFIX
+            n_after = _observed_write(
+                remaining, lambda o: _overwrite(o, staged, part_cols)
+            )
+            # cleanup deferred: the staging dir's marker must outlive
+            # the empty-table normalization below — a crash between the
+            # swap and the normalization used to strand an unreadable
+            # table with nothing left for recovery to re-run (round-11
+            # review)
+            _swap_touched_partitions(
+                staged, path, part_cols, touched, remaining.schema.json(),
+                cleanup=False,
+            )
+            if not any(
+                e.is_dir() and "=" in e.name for e in os.scandir(path)
+            ):
+                # every partition emptied — a dir holding only _SUCCESS
+                # is unreadable ("unable to infer schema"); leave a
+                # readable empty table carrying the full schema instead
+                _replace_table(spark, path, remaining.limit(0))
+            shutil.rmtree(staged)
+            spark.catalog.refreshByPath(path)
+            return n_before - n_after if counts else None
+    # full rewrite (layout preserved): unpartitioned targets, partition
+    # values whose Python path rendering can drift from Spark's
+    # encoding (float/timestamp/decimal), and lossy round-trips (above)
     n_before = existing.count() if counts else 0
-    staged = path + ".__staging__"
-    remaining.write.mode("overwrite").parquet(staged)
-    if counts:
-        n_after = spark.read.parquet(staged).count()
-    shutil.rmtree(path)
-    os.rename(staged, path)
-    spark.catalog.refreshByPath(path)
+    n_after = _replace_table(
+        spark, path, anti_new_rows(existing, keys, pk), part_cols
+    )
     return n_before - n_after if counts else None
-
 
 
 def _stage_name(table: str, kind: str) -> str:

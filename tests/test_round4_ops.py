@@ -1533,6 +1533,20 @@ def test_round10_additions_debut_in_round10_window():
     assert window[26 : 26 + len(r10_new)] == r10_new
 
 
+def test_failed_driver_row_reenters_gate_window():
+    """A driver CORRECTNESS row that failed (``err`` or a ``*_match``
+    false) does not count as sampled: round 11's only
+    ``orders_manifest_skipping`` row failed, so the query must re-enter
+    the window until it passes once."""
+    from dbcut_spark.queries import (
+        _driver_sampled_before,
+        gate_window_for_round,
+    )
+
+    assert "orders_manifest_skipping" not in _driver_sampled_before(13)
+    assert "orders_manifest_skipping" in gate_window_for_round(13)
+
+
 def test_round9_additions_debut_in_round9_window():
     """The r01-r08 driver-row union covers the whole pre-round-9
     registry (round-8 verdict), so round 9's never-sampled-first rule

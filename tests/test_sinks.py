@@ -1743,6 +1743,165 @@ def test_pruned_swap_delete_all_crash_recovery(spark, tmp_path, monkeypatch):
     assert sorted(got.columns) == ["id", "p", "v"]
 
 
+def _crash_on_swap_into(monkeypatch, path: str) -> None:
+    """Make the next ``os.rename`` onto ``path`` raise: a full-table
+    rewrite then dies between removing the table and renaming its
+    staged copy in."""
+    real_rename = os.rename
+
+    def rename(src, dst, *a, **k):
+        if os.path.abspath(dst) == os.path.abspath(path):
+            monkeypatch.setattr(os, "rename", real_rename)
+            raise RuntimeError("injected crash")
+        return real_rename(src, dst, *a, **k)
+
+    monkeypatch.setattr(os, "rename", rename)
+
+
+def test_compaction_crash_recovered_by_next_writer(
+    spark, tmp_path, monkeypatch
+):
+    """A compaction that dies between removing the table and renaming
+    its rewrite in leaves the complete rewrite and no table. The next
+    insert-ignore and the next compaction both complete that swap
+    first: no row is lost. (A compaction-only staging name was unknown
+    to recovery, so the next insert rebuilt the table from its own
+    batch alone.)"""
+    import pytest as _pt
+
+    from dbcut_spark.sinks.compact import compact_parquet
+
+    def frame(lo, hi):
+        return spark.range(lo, hi).select(
+            F.col("id").alias("k"), (F.col("id") * 2).alias("v")
+        )
+
+    path = str(tmp_path / "t.parquet")
+    frame(0, 1000).repartition(4).write.parquet(path)
+
+    _crash_on_swap_into(monkeypatch, path)
+    with _pt.raises(RuntimeError, match="injected crash"):
+        compact_parquet(spark, path)
+    assert not os.path.exists(path)
+    n = insert_ignore_parquet(spark, frame(990, 1010), path, ["k"])
+    got = spark.read.parquet(path)
+    assert got.count() == 1010
+    assert n == 10
+    assert got.agg(F.sum("v")).first()[0] == 1009 * 1010
+
+    _crash_on_swap_into(monkeypatch, path)
+    with _pt.raises(RuntimeError, match="injected crash"):
+        compact_parquet(spark, path)
+    assert not os.path.exists(path)
+    stats = compact_parquet(spark, path)
+    assert stats["files_after"] == 1
+    assert spark.read.parquet(path).count() == 1010
+    assert [p for p in os.listdir(tmp_path) if p != "t.parquet"] == []
+
+
+def test_recover_discards_success_only_staging(spark, tmp_path):
+    """A zero-row partitioned rewrite leaves a staging dir holding only
+    ``_SUCCESS`` before its schema stub is written. That dir is not a
+    table: next to an intact target it is discarded, never swapped in
+    (swapping it in left a directory no reader could infer a schema
+    from)."""
+    path = str(tmp_path / "p.parquet")
+    spark.range(100).select(
+        F.col("id").alias("k"), (F.col("id") % 4).alias("p")
+    ).write.partitionBy("p").parquet(path)
+    staged = path + ".__staging__"
+    os.makedirs(staged)
+    open(os.path.join(staged, "_SUCCESS"), "w").close()
+
+    new = spark.createDataFrame([(100, 0), (5, 1)], "k long, p long")
+    assert insert_ignore_parquet(spark, new, path, ["k"]) == 1
+    assert not os.path.exists(staged)
+    got = spark.read.parquet(path)
+    assert got.count() == 101
+    assert sorted(r.p for r in got.select("p").distinct().collect()) == [
+        0, 1, 2, 3,
+    ]
+
+
+def test_pruned_delete_all_crash_in_stub_swap_recovers(
+    spark, tmp_path, monkeypatch
+):
+    """A pruned delete that empties every partition ends with a full
+    rewrite to a zero-row schema stub. A crash after that rewrite
+    removed the table leaves the stub staged and the pruned intent
+    marker: recovery swaps the stub in first, then re-applies the
+    pruned swap, and the table reads back empty with its schema."""
+    import pytest as _pt
+
+    from dbcut_spark.sinks import insert_ignore as ii
+
+    path = str(tmp_path / "p.parquet")
+    spark.createDataFrame(
+        [(1, "a", 1), (2, "b", 2)], "id long, v string, p long"
+    ).write.partitionBy("p").parquet(path)
+    keys = spark.createDataFrame([(1,), (2,)], "id long")
+    _crash_on_swap_into(monkeypatch, path)
+    with _pt.raises(RuntimeError, match="injected crash"):
+        ii.delete_keys_parquet(spark, keys, path, ["id"])
+    assert not os.path.exists(path)
+    ii._recover_staging(spark, path)
+    assert [p for p in os.listdir(tmp_path) if p != "p.parquet"] == []
+    got = spark.read.parquet(path)
+    assert got.count() == 0
+    assert sorted(got.columns) == ["id", "p", "v"]
+
+
+def test_delete_keys_counts_ride_the_rewrite(spark, tmp_path):
+    """A counted delete is the before-count plus the rewrite and
+    nothing more: the rows kept are counted on the rewrite job itself,
+    not by reading the staged output back. It issues no more Spark jobs
+    than a plain count plus anti-joined write over the same inputs."""
+    from dbcut_spark.sinks.insert_ignore import (
+        anti_new_rows,
+        delete_keys_parquet,
+    )
+
+    a, b = str(tmp_path / "a"), str(tmp_path / "b")
+    for p in (a, b):
+        spark.range(100).select(
+            F.col("id").alias("k"), (F.col("id") * 2).alias("v")
+        ).write.parquet(p)
+
+    def keys():
+        return spark.range(0, 100, 7).select(F.col("id").alias("k"))
+
+    def plain():
+        existing = spark.read.parquet(b)
+        existing.count()
+        anti_new_rows(existing, keys(), ["k"]).write.mode(
+            "overwrite"
+        ).parquet(b + ".out")
+
+    n_delete = _jobs_in_group(
+        spark, "dk-delete",
+        lambda: delete_keys_parquet(spark, keys(), a, ["k"]),
+    )
+    n_plain = _jobs_in_group(spark, "dk-plain", plain)
+    assert 0 < n_delete <= n_plain, (n_delete, n_plain)
+    assert spark.read.parquet(a).count() == 85
+    assert spark.read.parquet(b + ".out").count() == 85
+
+
+def test_compact_rejects_remote_uris(spark):
+    """Compaction swaps directories with local-filesystem primitives,
+    like the other parquet sinks: a scheme URI is rejected before any
+    Spark job runs."""
+    import pytest as _pt
+
+    from dbcut_spark.sinks.compact import compact_parquet
+
+    def run():
+        with _pt.raises(ValueError, match="manifest"):
+            compact_parquet(spark, "s3://bucket/table")
+
+    assert _jobs_in_group(spark, "compact-s3", run) == 0
+
+
 def test_insert_ignore_schema_guard(spark, tmp_path):
     """insert_ignore_parquet must refuse a frame whose column set or
     types differ from the target (mixed-schema footers make spark.read
