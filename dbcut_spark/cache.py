@@ -9,8 +9,19 @@ sidecar, and loads it instead of touching the source DB
 
 Here: the same SHA-1 keying over {source identity, catalog table info,
 normalized query dict}; the payload is one parquet directory per closure
-table plus a ``meta.json`` sidecar with per-table counts. Parquet keeps
-the cache readable by any engine and the load path fully parallel.
+table plus a ``meta.json`` sidecar. Parquet keeps the cache readable by
+any engine and the load path fully parallel.
+
+``meta.json`` is ``{"counts": {table: rows}, "schemas": {table:
+StructType.jsonValue()}}``, written last (atomic tmp+replace) as the entry's
+commit point. The counts ride the write jobs as ``observe`` metrics
+(``sinks.insert_ignore._observed_write``), so a save runs exactly the
+write jobs. The schemas are the written frames' schemas, so a load
+passes them to ``spark.read.schema`` and runs no job (a schema-less
+parquet read infers, one Spark job per table); a file source reads a
+supplied schema as all-nullable, as a parquet write stores it. An
+entry without ``schemas`` does not exist: the next save recomputes and
+overwrites it.
 """
 
 from __future__ import annotations
@@ -22,8 +33,10 @@ import shutil
 from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 from dbcut_spark.config import QuerySpec
+from dbcut_spark.sinks.insert_ignore import _observed_write
 
 
 def sorted_nested(value: Any) -> Any:
@@ -53,19 +66,27 @@ class ResultCache:
     def _dir(self, key: str) -> str:
         return os.path.join(self.cache_dir, key)
 
+    def _meta(self, key: str) -> dict:
+        with open(os.path.join(self._dir(key), "meta.json")) as f:
+            return json.load(f)
+
     def exists(self, key: str) -> bool:
-        return os.path.exists(os.path.join(self._dir(key), "meta.json"))
+        try:
+            return "schemas" in self._meta(key)
+        except FileNotFoundError:
+            return False
 
     def save(self, key: str, frames: dict[str, DataFrame]) -> dict[str, int]:
         d = self._dir(key)
         os.makedirs(d, exist_ok=True)
         counts: dict[str, int] = {}
+        schemas: dict[str, dict] = {}
         for table, df in frames.items():
             path = os.path.join(d, f"{table}.parquet")
-            df.write.mode("overwrite").parquet(path)
-            # count from the written files (parquet footer metadata) —
-            # df.count() would re-execute the whole upstream plan
-            counts[table] = df.sparkSession.read.parquet(path).count()
+            counts[table] = _observed_write(
+                df, lambda o: o.write.mode("overwrite").parquet(path)
+            )
+            schemas[table] = df.schema.jsonValue()
         # atomic tmp+replace: meta.json is the entry's commit point —
         # exists() keys off it, so a torn write would make every later
         # run see exists()==True and crash in counts() forever, with
@@ -74,21 +95,23 @@ class ResultCache:
         mpath = os.path.join(d, "meta.json")
         tmp = f"{mpath}.tmp.{os.getpid()}"
         with open(tmp, "w") as f:
-            json.dump({"counts": counts}, f, indent=1, sort_keys=True)
+            json.dump(
+                {"counts": counts, "schemas": schemas}, f, indent=1, sort_keys=True
+            )
         os.replace(tmp, mpath)
         return counts
 
     def load(self, spark: SparkSession, key: str) -> dict[str, DataFrame]:
         d = self._dir(key)
-        meta = self.counts(key)
         return {
-            table: spark.read.parquet(os.path.join(d, f"{table}.parquet"))
-            for table in meta
+            table: spark.read.schema(StructType.fromJson(schema)).parquet(
+                os.path.join(d, f"{table}.parquet")
+            )
+            for table, schema in self._meta(key)["schemas"].items()
         }
 
     def counts(self, key: str) -> dict[str, int]:
-        with open(os.path.join(self._dir(key), "meta.json")) as f:
-            return json.load(f)["counts"]
+        return self._meta(key)["counts"]
 
     def purge(self, key: str | None = None) -> None:
         """Remove one entry, or every RESULT entry. The all-entries

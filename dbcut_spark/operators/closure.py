@@ -91,10 +91,16 @@ def _estimated_key_bytes(df: DataFrame) -> int:
 
 
 def parquet_loader(spark: SparkSession, sf_dir: str) -> TableLoader:
+    """Loader over a parquet directory. Each table's file schema is
+    inferred once per loader (one Spark job) and passed to every later
+    read, which then runs no job — the same once-per-``Engine``
+    reflection as the catalog."""
     from dbcut_spark.sources.parquet import read_table
 
+    file_schemas: dict = {}
+
     def load(table: str) -> DataFrame:
-        return read_table(spark, sf_dir, table)
+        return read_table(spark, sf_dir, table, file_schemas)
 
     return load
 

@@ -17,6 +17,13 @@ from pyspark.sql import SparkSession
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 
+def default_driver_memory(physical_bytes: int) -> str:
+    """Driver heap default: half of physical memory, at most 48g. A
+    fixed 48g heap on a smaller machine lets a long-lived local JVM
+    grow until the machine kills it."""
+    return f"{min(48 * 1024, physical_bytes // 2 // 2**20)}m"
+
+
 def get_spark(
     app_name: str = "dbcut_spark",
     cpus: int | str | None = None,
@@ -39,7 +46,13 @@ def get_spark(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "48g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_DRIVER_MEM")
+            or default_driver_memory(
+                os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+            ),
+        )
         .config("spark.ui.enabled", "false")
         .config("spark.sql.parquet.compression.codec", "zstd")
         # harness testdata stores ns-precision timestamps; read them as

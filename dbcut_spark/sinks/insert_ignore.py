@@ -31,9 +31,11 @@ from pyspark.sql import functions as F
 
 
 def anti_new_rows(new: DataFrame, existing: DataFrame, pk: list[str]) -> DataFrame:
-    """Rows of ``new`` whose PK is absent from ``existing``."""
-    keys = existing.select(*pk).dropDuplicates(pk)
-    return new.join(keys, on=pk, how="left_anti")
+    """Rows of ``new`` whose PK is absent from ``existing``. A LEFT ANTI
+    join's result does not depend on duplicate keys on its right side,
+    so ``existing`` is not deduplicated: that aggregate would cost a
+    shuffle stage for nothing."""
+    return new.join(existing.select(*pk), on=pk, how="left_anti")
 
 
 _SCHEME_RE = None

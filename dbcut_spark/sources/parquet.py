@@ -16,6 +16,7 @@ from functools import lru_cache
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 
 def _nanos_columns(path: str) -> tuple[str, ...]:
@@ -63,7 +64,18 @@ def _one_file(path: str) -> str:
     return path
 
 
-def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+def read_table(
+    spark: SparkSession,
+    sf_dir: str,
+    name: str,
+    file_schemas: dict[str, StructType] | None = None,
+) -> DataFrame:
+    """Read one source table with the timestamp normalizations below.
+
+    ``file_schemas`` memoizes each table's raw file schema (before the
+    ns→µs conversion): the first read of a table infers it, which costs
+    a Spark job, and records it; later reads pass it to
+    ``spark.read.schema`` and run no job. Without it every read infers."""
     path = os.path.join(sf_dir, f"{name}.parquet")
     if _nanos_columns(path):
         # Runtime-settable; must NOT rely on session-builder config — the
@@ -90,7 +102,13 @@ def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         # workloads never observe the mutation; sessions built by
         # get_spark() are UTC already, making this a no-op there.
         spark.conf.set("spark.sql.session.timeZone", "UTC")
-    df = spark.read.parquet(path)
+    if file_schemas is None:
+        df = spark.read.parquet(path)
+    elif name in file_schemas:
+        df = spark.read.schema(file_schemas[name]).parquet(path)
+    else:
+        df = spark.read.parquet(path)
+        file_schemas[name] = df.schema
     for col in _nanos_columns(path):
         df = df.withColumn(col, F.timestamp_micros(F.expr(f"`{col}` div 1000")))
     return df

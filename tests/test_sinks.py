@@ -216,6 +216,146 @@ def test_cache_roundtrip(spark, sf_dir, tmp_path):
     assert not cache.exists(key)
 
 
+def _closure_frames(spark, sf_dir):
+    plan = build_plan(TPCH_CATALOG, PLAN_RAW)
+    return ClosureExecutor(spark, parquet_loader(spark, sf_dir)).execute(plan)
+
+
+def test_loader_infers_each_source_schema_once(spark, tmp_path):
+    """An Engine's loader infers a table's file schema on its first read
+    (a Spark job) and hands it to every later read, which runs no job;
+    the ns→µs timestamp conversion still applies to those reads."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from dbcut_spark.api import Engine
+    from dbcut_spark.catalog import Catalog, TableSpec
+    from dbcut_spark.sources.parquet import read_table
+
+    src = str(tmp_path / "src")
+    os.makedirs(src)
+    pq.write_table(
+        pa.table({
+            "id": pa.array([1, 2], pa.int64()),
+            "ts": pa.array([1_700_000_000_123_456_789, None], pa.timestamp("ns")),
+        }),
+        os.path.join(src, "ev.parquet"),
+    )
+    cat = Catalog()
+    cat.tables["ev"] = TableSpec("ev", ("id",), ("id", "ts"))
+    eng = Engine(src, spark=spark, catalog=cat)
+    first = eng.executor.load("ev")
+    assert _jobs_in_group(spark, "loader-repeat", lambda: eng.executor.load("ev")) == 0
+    again = eng.executor.load("ev")
+    assert again.schema == first.schema == read_table(spark, src, "ev").schema
+    assert dict(again.dtypes)["ts"] == "timestamp"
+    assert sorted(again.collect()) == sorted(first.collect())
+
+
+def test_cache_save_jobs_match_plain_writes(spark, sf_dir, tmp_path):
+    """A cache save is the closure's writes and nothing more: its row
+    counts ride the write jobs, no read-back count per table."""
+    from dbcut_spark.operators.pinning import release_pinned
+
+    cache = ResultCache(str(tmp_path / "cache"))
+    key = cache_key(sf_dir, normalize_query(PLAN_RAW))
+    frames = _closure_frames(spark, sf_dir)
+    n_save = _jobs_in_group(spark, "cache-save", lambda: cache.save(key, frames))
+    release_pinned()
+    frames = _closure_frames(spark, sf_dir)
+
+    def plain():
+        for table, df in frames.items():
+            df.write.mode("overwrite").parquet(str(tmp_path / "plain" / table))
+
+    n_plain = _jobs_in_group(spark, "cache-plain", plain)
+    release_pinned()
+    assert 0 < n_save <= n_plain, (n_save, n_plain)
+
+
+def test_cache_load_runs_no_job(spark, sf_dir, tmp_path):
+    """A cache load reads every table with the schema its entry
+    records: no schema inference, so no Spark job."""
+    from dbcut_spark.operators.pinning import release_pinned
+
+    cache = ResultCache(str(tmp_path / "cache"))
+    key = cache_key(sf_dir, normalize_query(PLAN_RAW))
+    frames = _closure_frames(spark, sf_dir)
+    cache.save(key, frames)
+    release_pinned()
+    loaded = {}
+    n = _jobs_in_group(
+        spark, "cache-load", lambda: loaded.update(cache.load(spark, key))
+    )
+    assert n == 0
+    assert set(loaded) == set(frames)
+    assert loaded["customer"].count() == cache.counts(key)["customer"] == 5
+
+
+def test_cache_roundtrip_types_and_old_format_entry(spark, tmp_path):
+    """Timestamp, decimal, date, string and all-null columns come back
+    from a cache load with the schema a read of the files infers and the
+    same rows. An entry whose meta.json has counts but no schemas (the
+    earlier format) does not exist; the next save overwrites it into a
+    loadable entry."""
+    import datetime as dt
+    from decimal import Decimal
+
+    df = spark.createDataFrame(
+        [
+            (1, dt.datetime(2024, 3, 1, 12, 30, 45, 123456), Decimal("12.34"),
+             dt.date(2024, 3, 1), "a'b", None),
+            (2, None, None, None, None, None),
+        ],
+        "k bigint, ts timestamp, amt decimal(12,2), d date, s string, "
+        "nothing string",
+    )
+    cache = ResultCache(str(tmp_path / "cache"))
+    key = "0" * 40
+    d = os.path.join(cache.cache_dir, key)
+    os.makedirs(d)
+    with open(os.path.join(d, "meta.json"), "w") as f:
+        json.dump({"counts": {"t": 7}}, f)
+    assert not cache.exists(key)
+    assert cache.save(key, {"t": df}) == {"t": 2}
+    assert cache.exists(key)
+    assert cache.counts(key) == {"t": 2}
+    loaded = cache.load(spark, key)["t"]
+    assert loaded.schema == spark.read.parquet(os.path.join(d, "t.parquet")).schema
+    assert sorted(loaded.collect()) == sorted(df.collect())
+
+
+def test_insert_ignore_into_existing_takes_no_target_dedup(spark, tmp_path):
+    """The anti-join takes the target's keys as they stand: deduplicating
+    them would be a shuffle stage that cannot change a LEFT ANTI join's
+    result. The insert runs at least one job fewer than the same append
+    with that dedup."""
+
+    def frame(lo, hi):
+        return spark.range(lo, hi).select(
+            F.col("id").alias("k"), (F.col("id") * 2).alias("v")
+        )
+
+    a, b = str(tmp_path / "a"), str(tmp_path / "b")
+    for p in (a, b):
+        frame(0, 20).write.parquet(p)
+
+    def with_dedup():
+        keys = spark.read.parquet(b).select("k").dropDuplicates(["k"])
+        frame(10, 30).dropDuplicates(["k"]).join(
+            keys, on=["k"], how="left_anti"
+        ).write.mode("append").parquet(b)
+
+    n_insert = _jobs_in_group(
+        spark, "ii-nodedup",
+        lambda: insert_ignore_parquet(spark, frame(10, 30), a, ["k"]),
+    )
+    n_dedup = _jobs_in_group(spark, "ii-dedup", with_dedup)
+    assert 0 < n_insert <= n_dedup - 1, (n_insert, n_dedup)
+    got = spark.read.parquet(a)
+    assert got.count() == 30
+    assert got.select("k").distinct().count() == 30
+
 def test_cli_end_to_end(spark, sf_dir, tmp_path):
     import yaml
     from click.testing import CliRunner

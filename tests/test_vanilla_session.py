@@ -99,3 +99,11 @@ def test_queries_run_on_vanilla_session():
     ).fetchone()[0]
     got = out["_tz_probe"]["hour_start"]
     assert got == expected, f"tz-shifted hour bucket: spark={got} oracle={expected}"
+
+
+def test_default_driver_memory_is_half_of_physical_at_most_48g():
+    from dbcut_spark.session import default_driver_memory
+
+    assert default_driver_memory(15 * 2**30) == "7680m"
+    assert default_driver_memory(96 * 2**30) == "49152m"
+    assert default_driver_memory(512 * 2**30) == "49152m"
