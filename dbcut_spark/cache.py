@@ -14,7 +14,11 @@ any engine and the load path fully parallel.
 
 ``meta.json`` is ``{"counts": {table: rows}, "schemas": {table:
 StructType.jsonValue()}}``, written last (atomic tmp+replace) as the entry's
-commit point. The counts ride the write jobs as ``observe`` metrics
+commit point. A save writes every table at once from driver threads
+(``sinks.insert_ignore.per_table``) and commits ``meta.json`` only
+after every write has finished, and only if all of them succeeded;
+otherwise the first error is re-raised and the entry does not exist.
+The counts ride the write jobs as ``observe`` metrics
 (``sinks.insert_ignore._observed_write``), so a save runs exactly the
 write jobs. The schemas are the written frames' schemas, so a load
 passes them to ``spark.read.schema`` and runs no job (a schema-less
@@ -36,7 +40,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
 
 from dbcut_spark.config import QuerySpec
-from dbcut_spark.sinks.insert_ignore import _observed_write
+from dbcut_spark.sinks.insert_ignore import _observed_write, per_table
 
 
 def sorted_nested(value: Any) -> Any:
@@ -79,14 +83,17 @@ class ResultCache:
     def save(self, key: str, frames: dict[str, DataFrame]) -> dict[str, int]:
         d = self._dir(key)
         os.makedirs(d, exist_ok=True)
-        counts: dict[str, int] = {}
-        schemas: dict[str, dict] = {}
-        for table, df in frames.items():
+
+        def write(table: str, df: DataFrame) -> int:
             path = os.path.join(d, f"{table}.parquet")
-            counts[table] = _observed_write(
+            return _observed_write(
                 df, lambda o: o.write.mode("overwrite").parquet(path)
             )
-            schemas[table] = df.schema.jsonValue()
+
+        # complete only once every write finished; a failed write
+        # re-raises here, before meta.json
+        counts = dict(zip(frames, per_table(frames, write)))
+        schemas = {table: df.schema.jsonValue() for table, df in frames.items()}
         # atomic tmp+replace: meta.json is the entry's commit point —
         # exists() keys off it, so a torn write would make every later
         # run see exists()==True and crash in counts() forever, with

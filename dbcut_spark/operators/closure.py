@@ -271,9 +271,13 @@ class ClosureExecutor:
                 rel = child.relationship
                 assert rel is not None
                 parent_df = frontiers[id(node)]
+                # no distinct(): a LEFT SEMI result does not depend on
+                # duplicates on its right side, and the frontier-row
+                # bound that gates a broadcast already bounds these
+                # rows; only the Bloom route below needs distinct keys
                 keys = parent_df.select(
                     [F.col(s).alias(t) for s, t in zip(rel.source_cols, rel.target_cols)]
-                ).dropna().distinct()
+                ).dropna()
                 # a bounded spec's frontier is USUALLY small, but the
                 # static product compounds per o2m level (limit 1000 ×
                 # backref 1000 × depth 3 = 10^12): force-broadcasting a
@@ -344,6 +348,7 @@ class ClosureExecutor:
                         # bound exceeds the threshold: the distinct key
                         # set may still be small (duplicated FKs) — pay
                         # the exact count only now, on this slow path
+                        keys = keys.distinct()
                         n_keys = keys.count()
                         if n_keys <= max_rows:
                             child_df = self.load(rel.target).join(

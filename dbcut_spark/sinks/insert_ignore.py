@@ -13,6 +13,13 @@ metric (:func:`_observed_write`) — no cache, no count pre-pass. Loads
 reach the parquet and JDBC writers through one router,
 :func:`insert_ignore`.
 
+An existing parquet target is read with the schema its footer stores
+(:func:`_read_target`, a driver-side pyarrow footer read), not by
+Spark's schema inference, which is one Spark job per read: the schema
+guard and the anti-join's target side cost no job, and the footer is
+read again on every call, so the guard always checks the table as it
+stands.
+
 Scale note: the anti-join shuffles on the PK unless the *existing-keys*
 side is small enough to broadcast. For append-mostly pipelines the
 existing-key set per write batch is the whole target — at 100 TB prefer
@@ -24,10 +31,13 @@ SURVEY.md §7.3.5).
 
 from __future__ import annotations
 
+import json
 import os
+from typing import Iterator
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 
 def anti_new_rows(new: DataFrame, existing: DataFrame, pk: list[str]) -> DataFrame:
@@ -147,6 +157,80 @@ def _observed_write(df: DataFrame, write) -> int:
     return obs.get["n"]
 
 
+def per_table(frames: dict[str, DataFrame], action) -> Iterator:
+    """Run ``action(table, df)`` for every frame at once from driver
+    threads and yield the results in input order: N tables, each one
+    serial Spark round trip (a collect, a write), wait about one round
+    trip instead of N.
+
+    Workers: min(tables, ``defaultParallelism``). Each action is wrapped
+    in ``inheritable_thread_target`` as it is submitted, so its jobs
+    carry the caller's job group and local properties; one wrap per
+    action, because a wrap is one copy of those properties and actions
+    sharing a copy see each other's settings (a SQL execution id, a job
+    description). A result is dropped here once the caller takes it,
+    and an action's error is raised in its turn. Closing the generator,
+    or an error, cancels the actions not yet started and waits for the
+    running ones, so no worker outlives it."""
+    from collections import deque
+    from concurrent.futures import ThreadPoolExecutor
+
+    from pyspark.util import inheritable_thread_target
+
+    if not frames:
+        return
+    spark = next(iter(frames.values())).sparkSession
+    workers = min(len(frames), spark.sparkContext.defaultParallelism)
+    pool = ThreadPoolExecutor(workers, thread_name_prefix="dbcut-per-table")
+    try:
+        futures = deque(
+            pool.submit(inheritable_thread_target(spark)(action), table, df)
+            for table, df in frames.items()
+        )
+        while futures:
+            yield futures.popleft().result()
+    finally:
+        pool.shutdown(wait=True, cancel_futures=True)
+
+
+_SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
+
+
+def _read_target(spark: SparkSession, path: str) -> DataFrame:
+    """The parquet table at ``path``, read with the schema a schema-less
+    ``spark.read.parquet`` infers, without that read's inference job.
+
+    Spark infers a parquet schema (``mergeSchema`` off) from one data
+    file's footer, taking the Spark schema the writer stored under
+    ``org.apache.spark.sql.parquet.row.metadata``. Here the driver reads
+    the first data file's footer with pyarrow, as
+    ``sources.parquet.estimate_row_count`` does, and hands that schema
+    to ``spark.read.schema``, which runs no job; hive partition columns
+    are not in any footer and are still discovered from the paths. The
+    footer is read on every call, not memoized: the writers' schema
+    guards compare against the table as it stands, and another writer
+    may have replaced it. A table without such a footer (written by a
+    non-Spark writer, or holding no data file) takes Spark's own
+    inference."""
+    import pyarrow.parquet as pq
+
+    def visible(name: str) -> bool:  # Spark's hidden-path rule
+        return not (
+            name.startswith(".") or (name.startswith("_") and "=" not in name)
+        )
+
+    for root, dirs, files in os.walk(path):
+        dirs[:] = sorted(filter(visible, dirs))
+        data = sorted(filter(visible, files))
+        if data:
+            meta = pq.read_metadata(os.path.join(root, data[0])).metadata
+            if meta and _SPARK_SCHEMA_KEY in meta:
+                schema = StructType.fromJson(json.loads(meta[_SPARK_SCHEMA_KEY]))
+                return spark.read.schema(schema).parquet(path)
+            break
+    return spark.read.parquet(path)
+
+
 def _overwrite(
     out: DataFrame, dest: str, part_cols=(), options: dict | None = None
 ) -> None:
@@ -216,7 +300,7 @@ def insert_ignore_parquet(
     before: set[str] | None = None
     if os.path.exists(path):
         part_cols = detect_partition_cols(path)
-        existing = spark.read.parquet(path)
+        existing = _read_target(spark, path)
         # schema guard (same data-loss shape upsert_parquet blocks):
         # appending files whose column set/types differ from the
         # standing footers leaves a table where spark.read picks ONE
@@ -506,8 +590,6 @@ def _write_touched_marker(
     rename so a torn marker can never be mistaken for a complete one
     — recovery treats staging without a marker as pre-swap and
     discards it (the target is untouched at that point)."""
-    import json
-
     final = os.path.join(staged, _TOUCHED_MARKER)
     tmp = final + ".tmp"
     with open(tmp, "w") as f:
@@ -594,7 +676,6 @@ def _recover_pruned(spark: SparkSession, path: str) -> None:
       (idempotent; see :func:`_apply_pruned_swap`).
     - target missing: unreachable from this module (a pruned swap
       never removes the table root) — outside interference; raise."""
-    import json
     import shutil
 
     staged = path + _PRUNED_SUFFIX
@@ -717,7 +798,7 @@ def upsert_parquet(
         n = _observed_write(df, lambda o: o.write.parquet(path))
         return (0, n) if counts else (None, None)
     part_cols = detect_partition_cols(path)
-    existing = spark.read.parquet(path)
+    existing = _read_target(spark, path)
     extra_cols = [c for c in df.columns if c not in existing.columns]
     if extra_cols and schema_evolution == "strict":
         raise ValueError(
@@ -821,7 +902,7 @@ def delete_keys_parquet(
     if not os.path.exists(path):
         return 0
     part_cols = detect_partition_cols(path)
-    existing = spark.read.parquet(path)
+    existing = _read_target(spark, path)
     keys = df_keys.select(*pk).dropDuplicates(pk)
     if part_cols and _pruned_swap_safe(existing.schema, part_cols):
         touched = (

@@ -8,11 +8,18 @@ The reference echoes every statement executed against the destination
 ``... ON CONFLICT DO NOTHING``).
 
 Two modes:
-- :func:`dump_sql` — driver-side streaming iterator (``toLocalIterator``,
-  one partition in memory at a time) for human-sized dumps;
+- :func:`dump_sql` — driver-side statement iterator for human-sized
+  dumps: every table is collected at once, one job per table, from
+  driver threads (``sinks.insert_ignore.per_table``), so driver memory
+  holds up to the whole dumped cut; each table's rows are dropped once
+  rendered;
 - :func:`dump_sql_distributed` — each partition renders its INSERTs in
   executors and writes text shards; at 100 TB the dump itself is
-  embarrassingly parallel and never funnels through the driver.
+  embarrassingly parallel and never funnels through the driver. This
+  is the bounded-memory path at scale.
+
+Both render timestamps as session-time-zone wall clocks, as the JSON
+export does.
 """
 
 from __future__ import annotations
@@ -20,10 +27,14 @@ from __future__ import annotations
 import datetime as _dt
 import math as _math
 import re as _re
+from contextlib import closing
 from typing import Iterator
 
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from dbcut_spark.sinks.insert_ignore import per_table
 
 DIALECTS = {
     "sqlite": {"insert": "INSERT OR IGNORE INTO", "quote": '"', "suffix": ""},
@@ -310,31 +321,64 @@ def dump_sql(
     indexes: dict[str, list[tuple[list[str], bool]]] | None = None,
     defaults: dict[str, dict[str, object]] | None = None,
 ) -> Iterator[str]:
-    """Stream the dump statement-by-statement (reference output shape:
-    BEGIN → DDL → INSERT... → COMMIT). ``indexes`` maps table →
-    ``[(columns, unique)]``; index names are regenerated target-unique
-    across the whole dump (reference ``database.py:188-195``);
-    ``defaults`` maps table → {column: server default} (see
-    :func:`create_table_sql`)."""
+    """Yield the dump statement-by-statement (reference output shape:
+    BEGIN → DDL → INSERT... → COMMIT), tables in the given order.
+    ``indexes`` maps table → ``[(columns, unique)]``; index names are
+    regenerated target-unique across the whole dump (reference
+    ``database.py:188-195``); ``defaults`` maps table → {column: server
+    default} (see :func:`create_table_sql`).
+
+    Every table's rows are collected at once, one job each, from driver
+    threads; statements still come out table by table, and a table's
+    rows are dropped once rendered. Driver memory therefore holds up
+    to the whole dumped cut: this is the path for human-sized dumps,
+    :func:`dump_sql_distributed` the one for dumps of any size.
+    Closing the iterator early waits for the collects in flight and
+    starts no more."""
     yield "BEGIN;"
     seen_index_names: set[str] = set()
-    for table, df in tables.items():
-        if include_ddl:
-            yield create_table_sql(
-                table,
-                df,
-                pks.get(table, []),
-                dialect,
-                defaults=(defaults or {}).get(table),
-            )
-            for cols, unique in (indexes or {}).get(table, []):
-                name = index_name(table, cols, unique, seen_index_names)
-                seen_index_names.add(name)
-                yield create_index_sql(table, cols, df, dialect, unique, name=name)
-        columns = df.columns
-        for row in df.toLocalIterator():
-            yield _insert_stmt(table, columns, row, dialect)
+    fetched = per_table(tables, lambda _t, df: _fetched(df).collect())
+    with closing(fetched):
+        for (table, df), rows in zip(tables.items(), fetched):
+            if include_ddl:
+                yield create_table_sql(
+                    table,
+                    df,
+                    pks.get(table, []),
+                    dialect,
+                    defaults=(defaults or {}).get(table),
+                )
+                for cols, unique in (indexes or {}).get(table, []):
+                    name = index_name(table, cols, unique, seen_index_names)
+                    seen_index_names.add(name)
+                    yield create_index_sql(
+                        table, cols, df, dialect, unique, name=name
+                    )
+            columns = df.columns
+            for row in rows:
+                yield _insert_stmt(table, columns, row, dialect)
+            del rows
     yield "COMMIT;"
+
+
+def _fetched(df: DataFrame) -> DataFrame:
+    """The projection :func:`dump_sql` collects. A collected
+    ``TimestampType`` value is converted to the driver process's local
+    time zone, so timestamp columns are fetched cast to
+    ``timestamp_ntz``: the wall clock in the session time zone, the one
+    the distributed dump and the JSON export render. The DDL keeps the
+    frame's own types."""
+    fields = df.schema.fields
+    if not any(isinstance(f.dataType, T.TimestampType) for f in fields):
+        return df
+
+    def fetch(f: T.StructField):
+        c = F.col("`" + f.name.replace("`", "``") + "`")
+        if isinstance(f.dataType, T.TimestampType):
+            return c.cast("timestamp_ntz").alias(f.name)
+        return c
+
+    return df.select([fetch(f) for f in fields])
 
 
 def dump_sql_distributed(

@@ -292,16 +292,12 @@ def test_cache_load_runs_no_job(spark, sf_dir, tmp_path):
     assert loaded["customer"].count() == cache.counts(key)["customer"] == 5
 
 
-def test_cache_roundtrip_types_and_old_format_entry(spark, tmp_path):
-    """Timestamp, decimal, date, string and all-null columns come back
-    from a cache load with the schema a read of the files infers and the
-    same rows. An entry whose meta.json has counts but no schemas (the
-    earlier format) does not exist; the next save overwrites it into a
-    loadable entry."""
+def _types_frame(spark):
+    """Timestamp, decimal, date, string and all-null columns."""
     import datetime as dt
     from decimal import Decimal
 
-    df = spark.createDataFrame(
+    return spark.createDataFrame(
         [
             (1, dt.datetime(2024, 3, 1, 12, 30, 45, 123456), Decimal("12.34"),
              dt.date(2024, 3, 1), "a'b", None),
@@ -310,6 +306,15 @@ def test_cache_roundtrip_types_and_old_format_entry(spark, tmp_path):
         "k bigint, ts timestamp, amt decimal(12,2), d date, s string, "
         "nothing string",
     )
+
+
+def test_cache_roundtrip_types_and_old_format_entry(spark, tmp_path):
+    """Timestamp, decimal, date, string and all-null columns come back
+    from a cache load with the schema a read of the files infers and the
+    same rows. An entry whose meta.json has counts but no schemas (the
+    earlier format) does not exist; the next save overwrites it into a
+    loadable entry."""
+    df = _types_frame(spark)
     cache = ResultCache(str(tmp_path / "cache"))
     key = "0" * 40
     d = os.path.join(cache.cache_dir, key)
@@ -355,6 +360,311 @@ def test_insert_ignore_into_existing_takes_no_target_dedup(spark, tmp_path):
     got = spark.read.parquet(a)
     assert got.count() == 30
     assert got.select("k").distinct().count() == 30
+
+
+def _four_partition_types_frame(spark):
+    """4 rows on 4 partitions (no shuffle): timestamp, decimal, binary
+    and null columns."""
+    return spark.range(0, 4, 1, 4).select(
+        F.col("id").alias("k"),
+        F.when(
+            F.col("id") < 3,
+            F.timestamp_seconds(F.lit(1_577_836_800) + F.col("id") * 3_661),
+        ).alias("ts"),
+        (F.col("id") * 1.25).cast("decimal(10,2)").alias("amt"),
+        F.when(F.col("id") % 2 == 0, F.unhex(F.lit("01ff"))).alias("b"),
+        F.lit(None).cast("string").alias("nothing"),
+    )
+
+
+def test_dump_sql_one_collect_per_table(spark):
+    """Each table is one collect (one job), however many partitions it
+    spans, and the statements are the ones the partition-by-partition
+    stream rendered."""
+    types = _four_partition_types_frame(spark)
+    keys = spark.range(0, 4, 1, 4).select(F.col("id").alias("r"))
+    assert types.rdd.getNumPartitions() == keys.rdd.getNumPartitions() == 4
+    stmts = []
+    n = _jobs_in_group(
+        spark, "dump-collect",
+        lambda: stmts.extend(
+            dump_sql({"t": types, "u": keys}, {"t": ["k"], "u": ["r"]})
+        ),
+    )
+    assert n == 2, n
+    assert stmts == [
+        "BEGIN;",
+        'CREATE TABLE IF NOT EXISTS "t" (\n  "k" BIGINT NOT NULL,\n'
+        '  "ts" TIMESTAMP,\n  "amt" DECIMAL(10,2),\n  "b" BLOB,\n'
+        '  "nothing" TEXT,\n  CONSTRAINT "pk_t" PRIMARY KEY ("k")\n);',
+        'INSERT OR IGNORE INTO "t" ("k", "ts", "amt", "b", "nothing") '
+        "VALUES (0, '2020-01-01 00:00:00', '0.00', X'01ff', NULL);",
+        'INSERT OR IGNORE INTO "t" ("k", "ts", "amt", "b", "nothing") '
+        "VALUES (1, '2020-01-01 01:01:01', '1.25', NULL, NULL);",
+        'INSERT OR IGNORE INTO "t" ("k", "ts", "amt", "b", "nothing") '
+        "VALUES (2, '2020-01-01 02:02:02', '2.50', X'01ff', NULL);",
+        'INSERT OR IGNORE INTO "t" ("k", "ts", "amt", "b", "nothing") '
+        "VALUES (3, NULL, '3.75', NULL, NULL);",
+        'CREATE TABLE IF NOT EXISTS "u" (\n  "r" BIGINT NOT NULL,\n'
+        '  CONSTRAINT "pk_u" PRIMARY KEY ("r")\n);',
+        'INSERT OR IGNORE INTO "u" ("r") VALUES (0);',
+        'INSERT OR IGNORE INTO "u" ("r") VALUES (1);',
+        'INSERT OR IGNORE INTO "u" ("r") VALUES (2);',
+        'INSERT OR IGNORE INTO "u" ("r") VALUES (3);',
+        "COMMIT;",
+    ]
+
+
+def test_dump_sql_closed_early_leaves_no_worker(spark):
+    """Every table's collect starts at once; closing the dump after its
+    first INSERT waits for them and leaves no worker thread alive."""
+    import threading
+
+    frames = {
+        t: spark.range(0, 3, 1, 1).select(F.col("id").alias("k"))
+        for t in ("a", "b")
+    }
+
+    def first_insert_then_close():
+        it = dump_sql(frames, {}, include_ddl=False)
+        assert next(it) == "BEGIN;"
+        assert next(it).startswith('INSERT OR IGNORE INTO "a"')
+        it.close()
+
+    assert _jobs_in_group(spark, "dump-close", first_insert_then_close) == 2
+    assert not [
+        t for t in threading.enumerate() if t.name.startswith("dbcut-per-table")
+    ]
+
+
+def test_dump_sql_renders_session_zone_under_any_driver_tz(spark, monkeypatch):
+    """A collected TimestampType value comes back in the driver
+    process's local zone; the dump renders the session-zone wall clock
+    (UTC here), as the distributed dump and the JSON export do."""
+    import time
+
+    df = spark.sql("SELECT 1 AS k, timestamp'2020-01-01 00:00:00' AS ts")
+    monkeypatch.setenv("TZ", "America/New_York")
+    time.tzset()
+    try:
+        stmts = list(dump_sql({"t": df}, {}, include_ddl=False))
+    finally:
+        monkeypatch.undo()
+        time.tzset()
+    assert stmts[1] == (
+        'INSERT OR IGNORE INTO "t" ("k", "ts") VALUES (1, \'2020-01-01 00:00:00\');'
+    )
+
+
+def test_per_table_actions_carry_callers_job_group_and_properties(spark):
+    """Actions run on worker threads (more of them than cores, with a
+    short switch interval), each job carries the caller's job group and
+    local properties, and results come back in input order."""
+    import sys
+    import threading
+
+    from dbcut_spark.sinks.insert_ignore import per_table
+
+    sc = spark.sparkContext
+    frames = {
+        f"t{i}": spark.range(i, i + 2, 1, 1).select(F.col("id").alias("k"))
+        for i in range(16)
+    }
+
+    def action(table, df):
+        return (
+            table,
+            threading.current_thread().name,
+            sc.getLocalProperty("dbcut.test.prop"),
+            [r.k for r in df.collect()],
+        )
+
+    out = []
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    sc.setLocalProperty("dbcut.test.prop", "caller")
+    try:
+        n = _jobs_in_group(
+            spark, "per-table", lambda: out.extend(per_table(frames, action))
+        )
+    finally:
+        sc.setLocalProperty("dbcut.test.prop", None)
+        sys.setswitchinterval(interval)
+    assert n == 16, n
+    assert [o[0] for o in out] == list(frames)
+    assert all(o[1].startswith("dbcut-per-table") for o in out)
+    assert [o[2] for o in out] == ["caller"] * 16
+    assert [o[3] for o in out] == [[i, i + 1] for i in range(16)]
+
+
+def test_cache_save_writes_concurrently_and_commits_only_on_success(
+    spark, tmp_path
+):
+    """Every table is written at once; a failed write re-raises after
+    all of them finished, and no meta.json is committed."""
+    import pytest
+
+    def failing(msg):
+        return spark.range(3).select(F.raise_error(F.lit(msg)).cast("long").alias("v"))
+
+    cache = ResultCache(str(tmp_path / "cache"))
+    key = "1" * 40
+    frames = {
+        "a": spark.range(3).select(F.col("id").alias("v")),
+        "b": failing("boom b"),
+        "c": spark.range(5).select(F.col("id").alias("v")),
+        "d": failing("boom d"),
+    }
+    with pytest.raises(Exception, match="boom b"):
+        cache.save(key, frames)
+    d = os.path.join(cache.cache_dir, key)
+    assert not os.path.exists(os.path.join(d, "meta.json"))
+    assert not cache.exists(key)
+    # c comes after the failing b, so a serial save never wrote it
+    assert os.path.exists(os.path.join(d, "c.parquet", "_SUCCESS"))
+
+
+def test_insert_ignore_reads_existing_target_without_a_job(spark, tmp_path):
+    """The target is read with the schema its footer stores, so an
+    insert into an existing table runs no more jobs than the same
+    anti-join append over a target read with a known schema, one fewer
+    than with Spark's schema inference."""
+    from dbcut_spark.sinks.insert_ignore import anti_new_rows
+
+    def frame(lo, hi):
+        return spark.range(lo, hi).select(
+            F.col("id").alias("k"), (F.col("id") * 2).alias("v")
+        )
+
+    a, b, c = (str(tmp_path / n) for n in "abc")
+    for p in (a, b, c):
+        frame(0, 20).write.parquet(p)
+    schema = frame(0, 1).schema
+
+    def plain(p, read):
+        anti_new_rows(frame(10, 30), read(p), ["k"]).write.mode("append").parquet(p)
+
+    n_insert = _jobs_in_group(
+        spark, "ii-footer",
+        lambda: insert_ignore_parquet(spark, frame(10, 30), a, ["k"]),
+    )
+    n_known = _jobs_in_group(
+        spark, "ii-known",
+        lambda: plain(b, lambda p: spark.read.schema(schema).parquet(p)),
+    )
+    n_inferred = _jobs_in_group(
+        spark, "ii-inferred", lambda: plain(c, spark.read.parquet)
+    )
+    assert 0 < n_insert <= n_known <= n_inferred - 1, (n_insert, n_known, n_inferred)
+    assert spark.read.parquet(a).count() == 30
+
+
+def test_read_target_schema_matches_spark_inference(spark, tmp_path):
+    """The footer-read schema is the one Spark's inference takes, for the
+    cache type fixture and for a hive-partitioned target (partition
+    columns still inferred from the paths), and reading it runs no job."""
+    from dbcut_spark.sinks.insert_ignore import _read_target
+
+    flat, parted = str(tmp_path / "flat"), str(tmp_path / "parted")
+    _types_frame(spark).write.parquet(flat)
+    spark.createDataFrame(
+        [(1, "x", "10", 3), (2, "y", "11", 4)],
+        "id long, v string, p string, q int",
+    ).write.partitionBy("p", "q").parquet(parted)
+    for path in (flat, parted):
+        got = {}
+        n = _jobs_in_group(
+            spark, f"read-target-{os.path.basename(path)}",
+            lambda: got.update(df=_read_target(spark, path)),
+        )
+        inferred = spark.read.parquet(path)
+        assert n == 0
+        assert got["df"].schema == inferred.schema
+        assert sorted(got["df"].collect()) == sorted(inferred.collect())
+
+
+def test_insert_ignore_into_pyarrow_written_target(spark, tmp_path):
+    """A target whose footer has no Spark schema (written by pyarrow)
+    still loads through Spark's own inference, and its schema guard
+    still rejects a frame of another shape."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    import pytest
+
+    from dbcut_spark.sinks.insert_ignore import _read_target
+
+    path = str(tmp_path / "t")
+    os.makedirs(path)
+    pq.write_table(
+        pa.table({"id": pa.array([1, 2], pa.int64()), "v": ["a", "b"]}),
+        os.path.join(path, "data.parquet"),
+    )
+    assert sorted(_read_target(spark, path).collect()) == sorted(
+        spark.read.parquet(path).collect()
+    )
+    n = insert_ignore_parquet(
+        spark,
+        spark.createDataFrame([(2, "dup"), (3, "c")], "id long, v string"),
+        path, ["id"],
+    )
+    assert n == 1
+    assert sorted(r.id for r in spark.read.parquet(path).collect()) == [1, 2, 3]
+    with pytest.raises(ValueError, match="schema mismatch"):
+        insert_ignore_parquet(
+            spark, spark.createDataFrame([(4, 5)], "id long, v long"), path, ["id"]
+        )
+
+
+def test_closure_broadcast_keys_take_no_distinct(spark, sf_dir):
+    """A broadcast semi-join's key side is not deduplicated: a LEFT SEMI
+    result does not depend on right-side duplicates. On a parent
+    frontier of 4 partitions the closure runs no more jobs than the
+    same pinned root and broadcast semi join written by hand."""
+    from dbcut_spark.operators.closure import parquet_table_rows
+    from dbcut_spark.operators.pinning import release_pinned
+
+    plan = build_plan(
+        TPCH_CATALOG,
+        {
+            "from": "customer", "where": {"c_mktsegment": "BUILDING"},
+            "limit": "no", "join_depth": 1, "backref_depth": 0,
+            "exclude": ["events", "part", "supplier"],
+        },
+    )
+    base = parquet_loader(spark, sf_dir)
+
+    def load(t):
+        return base(t).repartition(4) if t == "customer" else base(t)
+
+    for t in ("customer", "nation"):
+        load(t)  # infer the source schemas outside the counted groups
+
+    def noop(df):
+        df.write.format("noop").mode("overwrite").save()
+
+    frames = {}
+
+    def closure():
+        frames.update(
+            ClosureExecutor(spark, load, parquet_table_rows(sf_dir)).execute(plan)
+        )
+        for df in frames.values():
+            noop(df)
+
+    def by_hand():
+        root = load("customer").filter(F.col("c_mktsegment") == "BUILDING").persist()
+        keys = root.select(F.col("c_nationkey").alias("n_nationkey")).dropna()
+        for df in (root, load("nation").join(F.broadcast(keys), "n_nationkey", "left_semi")):
+            noop(df)
+        root.unpersist()
+
+    n_closure = _jobs_in_group(spark, "closure-nodistinct", closure)
+    nations = {r.n_nationkey for r in frames["nation"].collect()}
+    assert nations == {r.c_nationkey for r in frames["customer"].collect()}
+    release_pinned()
+    n_hand = _jobs_in_group(spark, "closure-byhand", by_hand)
+    assert 0 < n_closure <= n_hand, (n_closure, n_hand)
+
 
 def test_cli_end_to_end(spark, sf_dir, tmp_path):
     import yaml
