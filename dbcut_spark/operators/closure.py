@@ -91,18 +91,13 @@ def _estimated_key_bytes(df: DataFrame) -> int:
 
 
 def parquet_loader(spark: SparkSession, sf_dir: str) -> TableLoader:
-    """Loader over a parquet directory. Each table's file schema is
-    inferred once per loader (one Spark job) and passed to every later
-    read, which then runs no job — the same once-per-``Engine``
-    reflection as the catalog."""
+    """Loader over a parquet directory: ``sources.parquet.read_table``,
+    whose source-schema memo infers each table's file schema once (one
+    Spark job) for as long as its files stand; every later read, from
+    this loader or any other source read, runs no job."""
     from dbcut_spark.sources.parquet import read_table
 
-    file_schemas: dict = {}
-
-    def load(table: str) -> DataFrame:
-        return read_table(spark, sf_dir, table, file_schemas)
-
-    return load
+    return lambda table: read_table(spark, sf_dir, table)
 
 
 def parquet_table_rows(sf_dir: str) -> Callable[[str], int | None]:

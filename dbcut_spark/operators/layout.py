@@ -14,31 +14,19 @@ any engine, so the layout math itself sits on the correctness gate.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def zvalue(a: Column, b: Column, bits: int = 16) -> Column:
-    """Morton code of two non-negative ints (low ``bits`` of each):
-    bit i of ``a`` lands at position 2i, bit i of ``b`` at 2i+1. The
-    interleave is a sum of disjoint powers of two — plain + / & / >>
-    / << that any engine reproduces exactly."""
-    terms = []
-    for i in range(bits):
-        terms.append(a.bitwiseAND(F.lit(1 << i)).cast("long") * F.lit(1 << i))
-        terms.append(b.bitwiseAND(F.lit(1 << i)).cast("long") * F.lit(1 << (i + 1)))
-    out = terms[0]
-    for t in terms[1:]:
-        out = out + t
-    return out
-
-
 def zvalue_sql(a: str, b: str, bits: int = 16) -> str:
-    """The identical Morton code as a SQL expression (oracle mirror).
-    BIGINT casts match the Spark twin's long arithmetic: on an INT32
-    column, bit 15's term ((x & 32768) * 65536 = 2^31) overflows
-    DuckDB's INT32 multiplication at runtime (round-8 review fix,
-    reproduced live)."""
+    """Morton code of two non-negative ints (low ``bits`` of each) as
+    one SQL expression, the same text for Spark (``F.expr``, one parse
+    in place of a py4j call per term) and the DuckDB oracle: bit i of
+    ``a`` lands at position 2i, bit i of ``b`` at 2i+1. The interleave
+    is a sum of disjoint powers of two in BIGINT arithmetic: on an
+    INT32 column, bit 15's term ((x & 32768) * 65536 = 2^31) overflows
+    DuckDB's INT32 multiplication at runtime. ``a`` and ``b`` are SQL
+    operands, quoted by the caller."""
     terms = []
     for i in range(bits):
         terms.append(f"((CAST({a} AS BIGINT) & {1 << i}) * {1 << i})")
@@ -63,7 +51,7 @@ def zorder_bucket_stats(
     predicates skip files; a single-column sort shows tight ranges on
     one column only."""
     stat_cols = stat_cols or [a, b]
-    z = zvalue(F.col(a), F.col(b), bits)
+    z = F.expr(zvalue_sql(f"`{a}`", f"`{b}`", bits))
     span = F.lit((1 << (2 * bits)) - 1)
     bucket = F.floor(z * n_buckets / (span + 1)).cast("int")
     aggs = [F.count(F.lit(1)).alias("n")]

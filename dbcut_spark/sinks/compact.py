@@ -204,7 +204,7 @@ def compact_parquet(
         from pyspark.sql import functions as F
         from pyspark.sql import types as T
 
-        from dbcut_spark.operators.layout import zvalue
+        from dbcut_spark.operators.layout import zvalue_sql
 
         a, b = zorder
         for c in (a, b):
@@ -258,13 +258,20 @@ def compact_parquet(
                 ),
             )
 
-        z = zvalue(
-            scaled(a, mm["amin"], mm["amax"]),
-            scaled(b, mm["bmin"], mm["bmax"]),
-            zorder_bits,
-        )
+        # the scaled inputs become columns, so the Morton code is one
+        # SQL expression over two names
+        za, zb = "__dbcut_za", "__dbcut_zb"
+        z = F.expr(zvalue_sql(za, zb, zorder_bits))
         target_n = max(1, -(-total // (target_file_mb * 1024 * 1024)))
-        out = df.repartitionByRange(target_n, z).sortWithinPartitions(z)
+        out = (
+            df.withColumns({
+                za: scaled(a, mm["amin"], mm["amax"]),
+                zb: scaled(b, mm["bmin"], mm["bmax"]),
+            })
+            .repartitionByRange(target_n, z)
+            .sortWithinPartitions(z)
+            .drop(za, zb)
+        )
     else:
         target_n = max(1, -(-total // (target_file_mb * 1024 * 1024)))
         out = df.repartition(target_n)

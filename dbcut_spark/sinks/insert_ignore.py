@@ -203,31 +203,25 @@ def _read_target(spark: SparkSession, path: str) -> DataFrame:
     Spark infers a parquet schema (``mergeSchema`` off) from one data
     file's footer, taking the Spark schema the writer stored under
     ``org.apache.spark.sql.parquet.row.metadata``. Here the driver reads
-    the first data file's footer with pyarrow, as
-    ``sources.parquet.estimate_row_count`` does, and hands that schema
-    to ``spark.read.schema``, which runs no job; hive partition columns
-    are not in any footer and are still discovered from the paths. The
-    footer is read on every call, not memoized: the writers' schema
-    guards compare against the table as it stands, and another writer
-    may have replaced it. A table without such a footer (written by a
-    non-Spark writer, or holding no data file) takes Spark's own
+    the first data file's footer with pyarrow, found by the walk every
+    source read uses (``sources.parquet.data_files``), and hands that
+    schema to ``spark.read.schema``, which runs no job; hive partition
+    columns are not in any footer and are still discovered from the
+    paths. The footer is read on every call, not memoized: the writers'
+    schema guards compare against the table as it stands, and another
+    writer may have replaced it. A table without such a footer (written
+    by a non-Spark writer, or holding no data file) takes Spark's own
     inference."""
     import pyarrow.parquet as pq
 
-    def visible(name: str) -> bool:  # Spark's hidden-path rule
-        return not (
-            name.startswith(".") or (name.startswith("_") and "=" not in name)
-        )
+    from dbcut_spark.sources.parquet import data_files
 
-    for root, dirs, files in os.walk(path):
-        dirs[:] = sorted(filter(visible, dirs))
-        data = sorted(filter(visible, files))
-        if data:
-            meta = pq.read_metadata(os.path.join(root, data[0])).metadata
-            if meta and _SPARK_SCHEMA_KEY in meta:
-                schema = StructType.fromJson(json.loads(meta[_SPARK_SCHEMA_KEY]))
-                return spark.read.schema(schema).parquet(path)
-            break
+    first = next(data_files(path), None)
+    if first is not None:
+        meta = pq.read_metadata(first).metadata
+        if meta and _SPARK_SCHEMA_KEY in meta:
+            schema = StructType.fromJson(json.loads(meta[_SPARK_SCHEMA_KEY]))
+            return spark.read.schema(schema).parquet(path)
     return spark.read.parquet(path)
 
 

@@ -833,6 +833,47 @@ def test_zorder_buckets_bound_both_dimensions(spark, sf_dir):
     assert frac_dy[len(frac_dy) // 2] <= 0.4
 
 
+def test_zvalue_sql_matches_python_bit_interleave(spark):
+    """One Morton formula for Spark and the DuckDB oracle: bit i of a at
+    position 2i, bit i of b at 2i+1, checked against a plain-Python
+    interleave on random inputs that include 0 and 2^bits - 1."""
+    import random
+
+    import duckdb
+
+    from dbcut_spark.operators.layout import zvalue_sql
+
+    def interleave(a, b, bits):
+        return sum(
+            ((a >> i) & 1) << (2 * i) | ((b >> i) & 1) << (2 * i + 1)
+            for i in range(bits)
+        )
+
+    rng = random.Random(7)
+    for bits in (16, 31):
+        top = (1 << bits) - 1
+        pairs = [(0, 0), (top, top), (0, top), (top, 0)] + [
+            (rng.randint(0, top), rng.randint(0, top)) for _ in range(200)
+        ]
+        want = [interleave(a, b, bits) for a, b in pairs]
+        got = (
+            spark.createDataFrame(
+                [(i, a, b) for i, (a, b) in enumerate(pairs)],
+                "i int, a long, b long",
+            )
+            .select("i", F.expr(zvalue_sql("a", "b", bits)).alias("z"))
+            .orderBy("i")
+            .collect()
+        )
+        assert [r["z"] for r in got] == want
+        values = ", ".join(f"({i}, {a}, {b})" for i, (a, b) in enumerate(pairs))
+        duck = duckdb.sql(
+            f"SELECT {zvalue_sql('a', 'b', bits)} FROM (VALUES {values}) "
+            "t(i, a, b) ORDER BY i"
+        ).fetchall()
+        assert [r[0] for r in duck] == want
+
+
 def test_kmv_union_and_intersection_estimates(spark):
     """Sketch algebra: union estimate within ~4 sigma; intersection
     (join-size) estimate within a loose band; union of a sketch with

@@ -3291,6 +3291,198 @@ def test_parquet_footer_cache_tracks_rewrites(spark, tmp_path):
 
 
 # ---------------------------------------------------------------------------
+# Source-schema memo (sources/parquet.py): keyed by file identity + confs
+# ---------------------------------------------------------------------------
+
+
+def _set_conf(spark, key, value):
+    """Set a session conf; returns the callable that restores it."""
+    prev = spark.conf.get(key)
+    spark.conf.set(key, value)
+    return lambda: spark.conf.set(key, prev)
+
+
+def test_read_table_repeat_runs_no_job(spark, tmp_path):
+    """The second read of a table takes its file schema from the memo:
+    no inference job, and the same schema and rows as the first read,
+    the ns timestamp still converted."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from dbcut_spark.sources.parquet import read_table
+
+    pq.write_table(
+        pa.table({
+            "id": pa.array([1, 2], pa.int64()),
+            "s": pa.array(["a", None]),
+            "tsu": pa.array([1_700_000_000_123_456, None], pa.timestamp("us")),
+            "tsn": pa.array([None, 1_700_000_000_123_456_789], pa.timestamp("ns")),
+        }),
+        str(tmp_path / "t.parquet"),
+    )
+    first = read_table(spark, str(tmp_path), "t")
+    n = _jobs_in_group(
+        spark, "memo-repeat", lambda: read_table(spark, str(tmp_path), "t")
+    )
+    assert n == 0
+    again = read_table(spark, str(tmp_path), "t")
+    assert again.schema == first.schema
+    assert dict(again.dtypes)["tsu"] == dict(again.dtypes)["tsn"] == "timestamp"
+    assert sorted(again.collect()) == sorted(first.collect())
+
+
+def test_read_table_sees_added_and_rewritten_files(spark, tmp_path):
+    """A part-file added to a table, or a file rewritten in place with
+    an extra column, changes the memo key: the next read infers the new
+    schema (as a fresh spark.read does), and the read after it runs no
+    job."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from dbcut_spark.sources.parquet import read_table
+
+    d = str(tmp_path)
+    tbl = os.path.join(d, "p.parquet")
+    os.makedirs(tbl)
+    pq.write_table(pa.table({"id": [1, 2]}), os.path.join(tbl, "part-0.parquet"))
+    # schema merge makes the added file's column visible whatever file
+    # Spark would pick to infer from
+    restore = _set_conf(spark, "spark.sql.parquet.mergeSchema", "true")
+    try:
+        assert read_table(spark, d, "p").columns == ["id"]
+        pq.write_table(
+            pa.table({"id": [3], "extra": ["x"]}),
+            os.path.join(tbl, "part-1.parquet"),
+        )
+        got = read_table(spark, d, "p")
+        assert got.schema == spark.read.parquet(tbl).schema
+        assert set(got.columns) == {"id", "extra"}
+        assert sorted(got.collect()) == sorted(spark.read.parquet(tbl).collect())
+        assert _jobs_in_group(spark, "memo-add", lambda: read_table(spark, d, "p")) == 0
+    finally:
+        restore()
+
+    path = os.path.join(d, "f.parquet")
+    pq.write_table(pa.table({"id": [1]}), path)
+    assert read_table(spark, d, "f").columns == ["id"]
+    pq.write_table(pa.table({"id": [1], "more": [2.5]}), path)  # in place
+    got = read_table(spark, d, "f")
+    assert got.columns == ["id", "more"]
+    assert got.collect()[0]["more"] == 2.5
+    assert _jobs_in_group(spark, "memo-rewrite", lambda: read_table(spark, d, "f")) == 0
+
+
+def test_read_table_schema_is_keyed_by_confs(spark, tmp_path):
+    """binaryAsString changes what Spark infers from the same file: each
+    conf value gets its own inferred schema, and both stay memoized."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from dbcut_spark.sources.parquet import read_table
+
+    d = str(tmp_path)
+    pq.write_table(pa.table({"b": pa.array([b"ab"], pa.binary())}), f"{d}/b.parquet")
+    key = "spark.sql.parquet.binaryAsString"
+    restore = _set_conf(spark, key, "false")
+    try:
+        assert dict(read_table(spark, d, "b").dtypes)["b"] == "binary"
+        spark.conf.set(key, "true")
+        got = read_table(spark, d, "b")
+        assert dict(got.dtypes)["b"] == "string"
+        assert got.collect()[0]["b"] == "ab"
+        assert _jobs_in_group(spark, "memo-conf", lambda: read_table(spark, d, "b")) == 0
+        spark.conf.set(key, "false")
+        back = []
+        n = _jobs_in_group(
+            spark, "memo-conf-back", lambda: back.append(read_table(spark, d, "b"))
+        )
+        assert n == 0 and dict(back[0].dtypes)["b"] == "binary"
+    finally:
+        restore()
+
+
+def test_read_table_from_per_table_threads(spark, tmp_path):
+    """Concurrent first reads of one table (the per_table worker pool)
+    raise nothing and agree on the schema; the memo holds it after."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from dbcut_spark.sinks.insert_ignore import per_table
+    from dbcut_spark.sources.parquet import read_table
+
+    d = str(tmp_path)
+    pq.write_table(
+        pa.table({
+            "id": pa.array(range(50), pa.int64()),
+            "ts": pa.array(range(50), pa.timestamp("ns")),
+        }),
+        f"{d}/c.parquet",
+    )
+    frames = {i: spark.range(1) for i in range(8)}
+    schemas = list(per_table(frames, lambda _t, _df: read_table(spark, d, "c").schema))
+    assert len(schemas) == 8 and all(s == schemas[0] for s in schemas)
+    assert schemas[0]["ts"].dataType.simpleString() == "timestamp"
+    assert _jobs_in_group(spark, "memo-threads", lambda: read_table(spark, d, "c")) == 0
+
+
+def test_read_table_same_path_rewrite_adds_timestamp(spark, tmp_path):
+    """A table rewritten at the same path with a new µs timestamp column
+    reads it as timestamp, as the same file at a fresh path does, also
+    on a session that infers TIMESTAMP_NTZ (a vanilla session's
+    default); the footer facts follow the file, not the path."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from dbcut_spark.sources.parquet import read_table
+
+    d = str(tmp_path)
+    path = f"{d}/t.parquet"
+    restore = _set_conf(spark, "spark.sql.parquet.inferTimestampNTZ.enabled", "true")
+    try:
+        pq.write_table(pa.table({"id": pa.array([1], pa.int64())}), path)
+        assert read_table(spark, d, "t").dtypes == [("id", "bigint")]
+        pq.write_table(
+            pa.table({
+                "id": pa.array([1], pa.int64()),
+                "ts": pa.array([1_700_000_000_000_000], pa.timestamp("us")),
+            }),
+            path,
+        )
+        assert dict(read_table(spark, d, "t").dtypes)["ts"] == "timestamp"
+    finally:
+        restore()
+
+
+def test_read_table_hive_partitioned_source(spark, tmp_path):
+    """A hive-partitioned source table reads like spark.read.parquet:
+    the partition column is present and the rows are equal."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from dbcut_spark.sources.parquet import estimate_row_count, read_table
+
+    d = str(tmp_path)
+    part = os.path.join(d, "h.parquet", "k=1")
+    os.makedirs(part)
+    pq.write_table(
+        pa.table({
+            "id": pa.array([1, 2], pa.int64()),
+            "ts": pa.array([1_700_000_000_000_000_000, None], pa.timestamp("ns")),
+        }),
+        os.path.join(part, "part-0.parquet"),
+    )
+    got = read_table(spark, d, "h")
+    assert "k" in got.columns
+    assert dict(got.dtypes)["ts"] == "timestamp"
+    want = spark.read.parquet(os.path.join(d, "h.parquet")).withColumn(
+        "ts", F.timestamp_micros(F.expr("ts div 1000"))
+    )
+    assert got.schema == want.schema
+    assert sorted(got.collect()) == sorted(want.collect())
+    assert estimate_row_count(os.path.join(d, "h.parquet")) == 2
+
+
+# ---------------------------------------------------------------------------
 # Manifest footer stats + file skipping (round 11)
 # ---------------------------------------------------------------------------
 
