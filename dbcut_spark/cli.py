@@ -22,6 +22,7 @@ from dbcut_spark.catalog import Catalog, TPCH_CATALOG, topo_order
 from dbcut_spark.config import load_config, normalize_query
 from dbcut_spark.operators.pinning import release_pinned
 from dbcut_spark.plans.extraction import build_plan
+from dbcut_spark.session import compiled_classes
 
 
 class Profiler:
@@ -31,23 +32,29 @@ class Profiler:
     profiler around each command and streams stats to stderr via
     ``/root/reference/dbcut/cli/operations.py:28-38``). Spark has no
     per-SQL-statement tap, so the profiled unit is the query/sink
-    action."""
+    action. Each record also counts the generated classes the JVM
+    compiled during it (``session.compiled_classes``, no Spark job)."""
 
     def __init__(self) -> None:
-        self.records: list[tuple[str, float, int | None]] = []
+        self.records: list[tuple[str, float, int, int | None]] = []
 
     def timed(self, label: str):
         import time
 
         @contextlib.contextmanager
         def _cm():
-            start = time.perf_counter()
+            start, compiled = time.perf_counter(), compiled_classes()
             holder = {"rows": None}
             try:
                 yield holder
             finally:
                 self.records.append(
-                    (label, time.perf_counter() - start, holder["rows"])
+                    (
+                        label,
+                        time.perf_counter() - start,
+                        compiled_classes() - compiled,
+                        holder["rows"],
+                    )
                 )
 
         return _cm()
@@ -55,11 +62,13 @@ class Profiler:
     def report(self) -> None:
         if not self.records:
             return
-        total = sum(t for _, t, _ in self.records)
+        total = sum(t for _, t, _, _ in self.records)
         click.echo("-- profiler ----------------------------------", err=True)
-        for label, secs, rows in self.records:
+        for label, secs, compiled, rows in self.records:
             extra = f" rows={rows}" if rows is not None else ""
-            click.echo(f"{label:<40}{secs:>9.3f}s{extra}", err=True)
+            click.echo(
+                f"{label:<40}{secs:>9.3f}s compiled={compiled}{extra}", err=True
+            )
         click.echo(f"{'total':<40}{total:>9.3f}s", err=True)
         self.records.clear()
 

@@ -6,6 +6,12 @@ Scale notes (100 TB design intent):
 - shuffle.partitions defaults to the local core count here; on a real
   cluster this should be ~2-3x total executor cores (AQE coalesces down).
 - Arrow enabled for the few Pandas-UDF paths (multimodal decode).
+- The JVM-wide cache of compiled generated classes holds
+  ``CODEGEN_CACHE_ENTRIES`` (4096), not Spark's 100: one ``query_mix``
+  pass (8 queries) needs 136 distinct classes, so at 100 every pass
+  evicted each class before its reuse and compiled it again. The whole
+  registry needs 2,531; an entry costs ~16 KB (source key plus
+  metaspace), ~64 MB for a full cache. Details next to the constant.
 """
 
 from __future__ import annotations
@@ -15,6 +21,18 @@ import os
 from pyspark.sql import SparkSession
 
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+
+# Entries of the JVM-wide generated-class cache
+# (spark.sql.codegen.cache.maxEntries). Working sets of distinct
+# generated classes, counted under a cap no run reached: one query_mix
+# pass 136; a cut_mix run (seed 1, 25 ops) 263; the whole registry at
+# sf0.1, each of its 180 queries once, 2,531 (at most 121 for one
+# query, 1,098 for the 106 of perfbench/query_pool.json). An entry
+# holds ~7.5 KB of generated source as its key (68 KB at most) plus
+# ~8 KB of metaspace, so a full cache costs ~64 MB at worst. After 5
+# query_mix passes metaspace was 152 MB with this cap against 156 MB at
+# Spark's 100.
+CODEGEN_CACHE_ENTRIES = 4096
 
 
 def default_driver_memory(physical_bytes: int) -> str:
@@ -33,6 +51,12 @@ def get_spark(
     """Build (or reuse) a SparkSession.
 
     ``cpus`` defaults to $SPARK_GRAFT_CPUS (harness contract) or '*'.
+
+    The codegen cache cap is a static conf read once per JVM, when the
+    first generated class compiles, so it only takes effect here, in
+    the builder: ``spark.conf.set`` on a live session raises for it. A
+    JVM whose first compile ran under a session the engine did not
+    build keeps Spark's 100 entries.
     """
     cpus = cpus or os.environ.get("SPARK_GRAFT_CPUS") or "*"
     if shuffle_partitions is None:
@@ -68,12 +92,25 @@ def get_spark(
         # on every timestamp column — at 100 TB that is the difference
         # between pruning time-ordered commits and scanning all of them
         .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def compiled_classes() -> int:
+    """Generated classes compiled so far in this process's JVM (0 before
+    it starts): one py4j read of Spark's ``CodegenMetrics``, no job."""
+    from pyspark import SparkContext
+
+    jvm = SparkContext._jvm
+    if jvm is None:
+        return 0
+    metrics = jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return metrics.METRIC_COMPILATION_TIME().getCount()
 
 
 def load_tables(spark: SparkSession, sf_dir: str, tables: list[str] | None = None):

@@ -742,6 +742,42 @@ def test_cli_end_to_end(spark, sf_dir, tmp_path):
     assert "total" in err
 
 
+def test_cli_profiler_counts_compiled_classes(spark, sf_dir, tmp_path):
+    """Every ``--profiler`` record prints ``compiled=N``: the generated
+    classes the JVM compiled during it, read with no Spark job."""
+    import re
+
+    import yaml
+    from click.testing import CliRunner
+
+    from dbcut_spark.cli import cli
+    from dbcut_spark.session import compiled_classes
+
+    # a literal no other test uses: its filter is a class never compiled
+    query = {**PLAN_RAW, "where": {"c_acctbal": {"$gt": -987.0625}}}
+    cfg = {
+        "databases": {"source_uri": sf_dir, "destination_uri": str(tmp_path / "t")},
+        "cache": str(tmp_path / "cache"),
+        "queries": [query],
+    }
+    cfg_path = str(tmp_path / "dbcut.yml")
+    with open(cfg_path, "w") as f:
+        yaml.safe_dump(cfg, f)
+
+    before = compiled_classes()
+    res = CliRunner().invoke(
+        cli, ["-c", cfg_path, "--profiler", "--no-cache", "load"],
+        catch_exceptions=False,
+    )
+    assert res.exit_code == 0, res.output
+    records = [
+        l for l in res.stderr.splitlines() if l.startswith(("closure ", "insert "))
+    ]
+    assert records and any(l.startswith("insert customer") for l in records)
+    counts = [int(re.search(r" compiled=(\d+)", l).group(1)) for l in records]
+    assert 0 < sum(counts) <= compiled_classes() - before
+
+
 def test_record_replay_cassette(spark, sf_dir, tmp_path):
     """A closure recorded through RecordingLoader must replay
     identically from the cassette alone (no source access)."""
